@@ -16,19 +16,40 @@ same contracts as plain functions over a SparkSession + two models:
 
 Models load once at service construction (the reference loads at boot,
 ``assets/app_nfl.py:337-338``; its Livy path reloads per statement —
-the engine never does).
+the engine never does). Construction also compiles each model into a
+``ScoringModel`` (``ml/score.py``) and certifies it bit-identical to
+MLlib on a fixed probe set. When both certify, ``score`` walks the trees
+in Python and launches no Spark job; otherwise it logs one warning and
+scores through Spark (``score_record``), as the reference does. Either
+way a request is checked by ``validate_request`` first, so a bad field
+or an unseen label is a ``ValueError`` (HTTP 400), never a Spark error.
+``score_batch`` and the stream always use MLlib.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 
 from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nfl_predictions_spark.ml.score import score_best_play, score_record
-from nfl_predictions_spark.schemas import SCORE_REQUEST_SCHEMA
+from nfl_predictions_spark.ml.score import (
+    ScoringModel,
+    score_best_play,
+    score_compiled,
+    score_record,
+)
+
+
+log = logging.getLogger(__name__)
+
+_JSON = "application/json"
+
+
+def _error(message: str) -> bytes:
+    return json.dumps({"error": message}).encode("utf-8")
 
 
 class ScoringService:
@@ -43,6 +64,9 @@ class ScoringService:
         self.pass_model = pass_model
         self.run_model = run_model
         self._plays = plays
+        compiled_pass = ScoringModel.compile(pass_model)
+        compiled_run = compiled_pass and ScoringModel.compile(run_model)
+        self._compiled = (compiled_pass, compiled_run) if compiled_run else None
 
     @classmethod
     def from_trained(cls, spark: SparkSession, plays: DataFrame | None = None):
@@ -52,17 +76,19 @@ class ScoringService:
 
     # -- /api contract ------------------------------------------------------
     def score(self, record: dict) -> dict:
-        return score_record(self.spark, self.pass_model, self.run_model, record)
+        """Score one play: compiled when certified, else through Spark.
+        An invalid record raises ``ValueError`` on either path."""
+        if self._compiled is None:
+            return score_record(self.spark, self.pass_model, self.run_model, record)
+        return score_compiled(*self._compiled, record)
 
     def score_json(self, payload: str) -> str:
-        """JSON-in/JSON-out single-record scoring. Missing fields raise
-        (the reference silently NameError'd on its sklearn route — a
-        documented defect we do not reproduce; SURVEY §2A notes)."""
-        record = json.loads(payload)
-        missing = [f.name for f in SCORE_REQUEST_SCHEMA.fields if f.name not in record]
-        if missing:
-            raise ValueError(f"missing required fields: {missing}")
-        return json.dumps(self.score(record))
+        """JSON-in/JSON-out single-record scoring. A missing, mistyped
+        or out-of-range field, or an unseen label, raises ``ValueError``
+        naming it (the reference silently NameError'd on its sklearn
+        route — a documented defect we do not reproduce; SURVEY §2A
+        notes)."""
+        return json.dumps(self.score(json.loads(payload)))
 
     # -- batch scoring ------------------------------------------------------
     def score_batch(self, requests: DataFrame) -> DataFrame:
@@ -75,9 +101,11 @@ class ScoringService:
         threaded Flask on :4444, ``assets/app_nfl.py:282-343``), with
         stdlib ``http.server`` so the engine core stays framework-free.
         Returns the bound ``HTTPServer``; the caller owns
-        ``serve_forever``/``shutdown``. Malformed or incomplete requests
-        get a 400 (the reference's bare ``except`` swallowed them — a
-        documented defect we do not reproduce)."""
+        ``serve_forever``/``shutdown``. Malformed or incomplete requests,
+        and a bad ``Content-Length``, get a 400 (the reference's bare
+        ``except`` swallowed them — a documented defect we do not
+        reproduce); any other error in a POST gets a 500 JSON reply
+        rather than a dropped connection."""
         from http.server import BaseHTTPRequestHandler, HTTPServer
 
         service = self
@@ -102,28 +130,32 @@ class ScoringService:
                 self._reply(200, page, "text/html")
 
             def do_POST(self):
-                n = int(self.headers.get("Content-Length", "0"))
-                body = self.rfile.read(n).decode("utf-8")
+                try:
+                    code, out, ctype = self._post()
+                except Exception as e:  # last resort: answer, never drop the connection
+                    log.exception("POST %s failed", self.path)
+                    code, out, ctype = 500, _error(f"{type(e).__name__}: {e}"), _JSON
+                self._reply(code, out, ctype)
+
+            def _post(self) -> tuple[int, bytes, str]:
+                length = self.headers.get("Content-Length", "0").strip()
+                if not length.isdecimal():
+                    return 400, _error("Content-Length must be a non-negative integer"), _JSON
+                body = self.rfile.read(int(length))
                 if self.path in ("/", "/index"):
                     from urllib.parse import parse_qs
 
-                    form = {k: v[0] for k, v in parse_qs(body).items()}
                     try:
-                        page = service.handle_index_form(form).encode("utf-8")
-                        self._reply(200, page, "text/html")
+                        form = {k: v[0] for k, v in parse_qs(body.decode("utf-8")).items()}
+                        return 200, service.handle_index_form(form).encode("utf-8"), "text/html"
                     except (ValueError, KeyError) as e:
-                        self._reply(400, str(e).encode(), "text/plain")
-                    return
+                        return 400, str(e).encode(), "text/plain"
                 if self.path != "/api":
-                    self.send_error(404, "unknown route")
-                    return
+                    return 404, _error("unknown route"), _JSON
                 try:
-                    out = service.score_json(body).encode("utf-8")
-                    code = 200
-                except (ValueError, KeyError, json.JSONDecodeError) as e:
-                    out = json.dumps({"error": str(e)}).encode("utf-8")
-                    code = 400
-                self._reply(code, out, "application/json")
+                    return 200, service.score_json(body.decode("utf-8")).encode("utf-8"), _JSON
+                except ValueError as e:  # bad JSON or UTF-8 are ValueErrors too
+                    return 400, _error(str(e)), _JSON
 
             def log_message(self, *args):  # keep test output clean
                 pass

@@ -42,6 +42,8 @@ CTE stages) reproduces the merge table exactly, including tie-breaks
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -150,6 +152,17 @@ def _encode_sym(col) -> F.Column:
     )
 
 
+#: Java regex '.': it excludes \r, U+0085, U+2028 and U+2029 as well as
+#: \n (Python '.' excludes only \n).
+_JAVA_DOT = re.compile("([^\n\r\u0085\u2028\u2029])")
+
+
+def _encode_sym_py(word: str) -> str:
+    """``_encode_sym`` in Python, exactly: Spark ``rtrim`` strips only
+    spaces, as ``.rstrip(" ")`` does."""
+    return " " + _JAVA_DOT.sub(r"\1  ", word).rstrip(" ") + " "
+
+
 def learn_merges(spark: SparkSession, sf_dir: str, rounds: int = _ROUNDS) -> list[tuple]:
     """Run the BPE trainer; returns the merge table as
     [(step, lhs, rhs, merged, pair_count)] — the tokenizer model.
@@ -171,7 +184,6 @@ def learn_merges(spark: SparkSession, sf_dir: str, rounds: int = _ROUNDS) -> lis
     distributed form ran (ASCII-ordered strings compare identically in
     Python, Spark UTF8String and DuckDB).
     """
-    import re
     from collections import defaultdict
 
     docs = table(spark, sf_dir, "documents")
@@ -184,18 +196,7 @@ def learn_merges(spark: SparkSession, sf_dir: str, rounds: int = _ROUNDS) -> lis
         .limit(_TRAIN_VOCAB_CAP)
         .collect()
     )
-    # the same " a  b  a  b " double-space symbol encoding _encode_sym
-    # produces, mirrored EXACTLY (ADVICE r11 #3): Java regex '.'
-    # excludes \r, U+0085, U+2028, U+2029 as well as \n (Python '.'
-    # excludes only \n), and Spark rtrim strips every trailing char
-    # <= 0x20 (Python .rstrip(' ') strips only spaces) — so pad with a
-    # Java-'.'-equivalent char class and strip the full control range.
-    java_dot = "([^\n\r\u0085\u2028\u2029])"
-    rtrim_chars = "".join(chr(i) for i in range(0x21))
-    vocab = [
-        [" " + re.sub(java_dot, r"\1  ", r.w).rstrip(rtrim_chars) + " ", int(r.f)]
-        for r in rows
-    ]
+    vocab = [[_encode_sym_py(r.w), int(r.f)] for r in rows]
     merges: list[tuple] = []
     for step in range(1, rounds + 1):
         pc: dict = defaultdict(int)

@@ -217,9 +217,9 @@ def test_python_datasource_partition_invariant(spark):
 
 def test_single_record_scoring_launches_no_shuffle(spark, service):
     """SURVEY §4 risk 3 / VERDICT r03 #6: the reference's whole point is
-    per-request scoring, so `score(record)` must stay a LocalRelation
-    pipeline — every Spark job it triggers must be single-stage (a
-    shuffle always splits a job into >=2 stages)."""
+    per-request scoring, so `score(record)` must not shuffle. The
+    certified compiled path is stricter: it launches no Spark job at
+    all (and so no shuffle)."""
     from nfl_predictions_spark.ml.score import GOLDEN_REQUEST
 
     sc = spark.sparkContext
@@ -230,17 +230,7 @@ def test_single_record_scoring_launches_no_shuffle(spark, service):
     finally:
         sc.setJobGroup(None, None)
     assert out["best_play"] in ("Passing Play", "Running Play")
-
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
-    assert job_ids, "scoring ran no Spark job — tracker group lost"
-    for jid in job_ids:
-        info = tracker.getJobInfo(jid)
-        assert info is not None
-        assert len(info.stageIds) == 1, (
-            f"job {jid} has stages {info.stageIds}: single-record scoring "
-            "must be shuffle-free"
-        )
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_index_form_roundtrip(service):
@@ -297,3 +287,213 @@ def test_index_form_roundtrip(service):
         assert f"best_play={direct['best_play']}" in page2
     finally:
         srv.shutdown()
+
+
+# -- compiled single-play scoring: parity with MLlib, validation, HTTP ------
+
+_LABELS = ("FirstPlay", "Run", "Pass")
+
+
+def _record_strategy():
+    """Requests over perfbench/wl_api.py's field ranges, all three labels."""
+    from hypothesis import strategies as st
+
+    from nfl_predictions_spark.schemas import TEAMS
+
+    return st.fixed_dictionaries(
+        {
+            "qtr": st.integers(1, 5),
+            "down": st.integers(1, 4),
+            "TimeSecs": st.integers(-659, 3600),
+            "yrdline100": st.integers(1, 99),
+            "ydstogo": st.integers(1, 42),
+            "ydsnet": st.integers(-48, 99),
+            "month_day": st.integers(103, 1228),
+            "posteam": st.sampled_from(TEAMS),
+            "DefensiveTeam": st.sampled_from(TEAMS),
+            "PlayType_lag": st.sampled_from(_LABELS),
+        }
+    )
+
+
+def test_compiled_scoring_is_bit_identical_to_spark(spark, service):
+    """Differential test: for every record the compiled `score` gives
+    the reply Spark gives, and raw predictions equal MLlib's bit for
+    bit. Each example scores a list of records in one Spark batch, and
+    its first record through `score_record` as well."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import functions as F
+
+    from nfl_predictions_spark.ml.score import score_record
+    from nfl_predictions_spark.schemas import SCORE_REQUEST_SCHEMA
+
+    assert service._compiled is not None, "certification failed on this host"
+    compiled_pass, compiled_run = service._compiled
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(_record_strategy(), min_size=1, max_size=40))
+    def check(records):
+        rows = [tuple(r[f.name] for f in SCORE_REQUEST_SCHEMA.fields) for r in records]
+        spark_rows = (
+            service.score_batch(spark.createDataFrame(rows, SCORE_REQUEST_SCHEMA))
+            .select(
+                "passing_yards",
+                "running_yards",
+                F.struct(
+                    "best_play",
+                    F.round("passing_yards", 2).alias("passing_yards"),
+                    F.round("running_yards", 2).alias("running_yards"),
+                ).alias("reply"),
+            )
+            .collect()
+        )
+        for record, row in zip(records, spark_rows):
+            assert compiled_pass.predict(record).hex() == row.passing_yards.hex(), record
+            assert compiled_run.predict(record).hex() == row.running_yards.hex(), record
+            assert service.score(record) == row.reply.asDict(), record
+        first = records[0]
+        assert service.score(first) == score_record(
+            spark, service.pass_model, service.run_model, first
+        )
+
+    check()
+
+
+def _invalid_record_strategy():
+    """A valid record with one field made invalid: wrong type, null,
+    outside int32, an unseen label, or missing."""
+    from hypothesis import strategies as st
+
+    from nfl_predictions_spark.schemas import SCORE_REQUEST_SCHEMA
+
+    ints = [f.name for f in SCORE_REQUEST_SCHEMA.fields if f.dataType.typeName() == "integer"]
+    strs = [f.name for f in SCORE_REQUEST_SCHEMA.fields if f.dataType.typeName() == "string"]
+    not_int = st.one_of(
+        st.booleans(), st.floats(allow_nan=False), st.text(max_size=5), st.none()
+    )
+    out_of_range = st.one_of(st.integers(max_value=-(2**31) - 1), st.integers(min_value=2**31))
+    not_str = st.one_of(st.integers(), st.booleans(), st.floats(allow_nan=False), st.none())
+    unseen = st.text(max_size=8).filter(lambda s: s not in _LABELS)
+    bad = st.one_of(
+        st.tuples(st.sampled_from(ints), st.one_of(not_int, out_of_range)),
+        st.tuples(st.sampled_from(strs), not_str),
+        st.tuples(st.just("PlayType_lag"), unseen),
+        st.tuples(st.sampled_from(ints + strs), st.just(KeyError)),
+    )
+
+    def corrupt(args):
+        record, (field, value) = args
+        record = dict(record)
+        if value is KeyError:
+            del record[field]
+        else:
+            record[field] = value
+        return field, record
+
+    return st.tuples(_record_strategy(), bad).map(corrupt)
+
+
+def test_invalid_records_rejected_on_both_paths(spark, service):
+    """The compiled path never scores a record the Spark path rejects:
+    both raise a ValueError that names the bad field."""
+    from hypothesis import given, settings
+
+    from nfl_predictions_spark.ml.score import score_record
+
+    @settings(max_examples=60, deadline=None)
+    @given(_invalid_record_strategy())
+    def check(case):
+        field, record = case
+        with pytest.raises(ValueError, match=field):
+            service.score(record)
+        with pytest.raises(ValueError, match=field):
+            score_record(spark, service.pass_model, service.run_model, record)
+
+    check()
+
+
+def test_certification_rejects_a_perturbed_leaf(service):
+    """Certification compares bits, so a model whose one leaf differs
+    from MLlib's (by far less than the 2 dp reply shows) is rejected."""
+    from nfl_predictions_spark.ml.score import ScoringModel
+
+    gbt = service.pass_model.stages[-1]
+    model = ScoringModel.from_pipeline(service.pass_model)
+    assert model.certify(gbt) is not None
+    tree, probe = model.trees[0], model.probes()[0]
+    tree.value[tree.leaf(probe)] += 1e-9
+    assert model.certify(gbt) is None
+
+
+def test_uncertified_models_fall_back_to_spark(spark, service, monkeypatch, caplog):
+    """When certification fails the service logs one warning and scores
+    through Spark, with the same reply."""
+    import logging
+
+    from nfl_predictions_spark.api import ScoringService
+    from nfl_predictions_spark.ml import score
+    from nfl_predictions_spark.ml.score import GOLDEN_REQUEST, parse_trees
+
+    def perturbed(debug_string):
+        trees = parse_trees(debug_string)
+        trees[0].value[:] = [v + 1e-9 for v in trees[0].value]
+        return trees
+
+    monkeypatch.setattr(score, "parse_trees", perturbed)
+    with caplog.at_level(logging.WARNING, logger=score.__name__):
+        fallback = ScoringService(spark, service.pass_model, service.run_model)
+    assert fallback._compiled is None
+    assert len([r for r in caplog.records if r.name == score.__name__]) == 1
+    assert fallback.score(dict(GOLDEN_REQUEST)) == service.score(dict(GOLDEN_REQUEST))
+    with pytest.raises(ValueError, match="PlayType_lag"):
+        fallback.score(dict(GOLDEN_REQUEST, PlayType_lag="Bogus"))
+
+
+def test_http_bad_requests_get_json_errors(service, monkeypatch):
+    """Every POST gets an answer: a bad Content-Length or an unseen label
+    is a 400 JSON error, any other failure a 500 JSON error, and the
+    server keeps serving afterwards."""
+    import http.client
+    import threading
+
+    from nfl_predictions_spark.ml.score import GOLDEN_REQUEST
+
+    srv = service.serve_http()
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+
+    def post(body: bytes, length: str | None = None):
+        conn = http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=60)
+        conn.putrequest("POST", "/api")
+        conn.putheader("Content-Length", str(len(body)) if length is None else length)
+        conn.endheaders(body)
+        resp = conn.getresponse()
+        out = resp.status, resp.getheader("Content-Type"), json.loads(resp.read())
+        conn.close()
+        return out
+
+    try:
+        golden = json.dumps(GOLDEN_REQUEST).encode()
+        for length in ("x", "-1", "1.5"):
+            status, ctype, body = post(b"", length)
+            assert (status, ctype) == (400, "application/json")
+            assert "Content-Length" in body["error"]
+        status, _, body = post(json.dumps(dict(GOLDEN_REQUEST, PlayType_lag="Bogus")).encode())
+        assert status == 400 and "PlayType_lag" in body["error"]
+        status, _, body = post(json.dumps(dict(GOLDEN_REQUEST, qtr=3.0)).encode())
+        assert status == 400 and "qtr" in body["error"]
+        status, _, body = post(b"[1, 2]")
+        assert status == 400 and "JSON object" in body["error"]
+
+        def boom(payload):
+            raise RuntimeError("scorer exploded")
+
+        monkeypatch.setattr(service, "score_json", boom)
+        status, ctype, body = post(golden)
+        assert (status, ctype) == (500, "application/json") and "scorer exploded" in body["error"]
+        monkeypatch.undo()
+        status, _, body = post(golden)
+        assert status == 200 and body == service.score(dict(GOLDEN_REQUEST))
+    finally:
+        srv.shutdown()
+        srv.server_close()

@@ -149,3 +149,31 @@ def test_skyline_dominance_definition(spark):
 
     for p in pts:
         assert (p[0] in sky) == (not dominated(p))
+
+
+def test_bpe_trainer_symbols_match_spark_encoding(spark, tmp_path):
+    """Spark ``rtrim`` strips only spaces, so a word ending in a control
+    character keeps it as a symbol: the trainer's Python encoding must
+    give the same symbols as ``_encode_sym``, and ``learn_merges`` must
+    merge that trailing symbol."""
+    from pyspark.sql import functions as F
+
+    from nfl_predictions_spark.operators.tokenizer import (
+        _encode_sym,
+        _encode_sym_py,
+        learn_merges,
+    )
+
+    words = ["ab\t", "a\x0bb\x0c", "x\r", "tab\t\t", "plain"]
+    df = spark.createDataFrame([(w,) for w in words], "w string")
+    assert [r[0] for r in df.select(_encode_sym(F.col("w"))).collect()] == [
+        _encode_sym_py(w) for w in words
+    ]
+
+    spark.createDataFrame([(1, "ab\t ab\t ab\t cd")], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    assert learn_merges(spark, str(tmp_path), rounds=2) == [
+        (1, "a", "b", "ab", 3),
+        (2, "ab", "\t", "ab\t", 3),
+    ]
