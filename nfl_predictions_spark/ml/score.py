@@ -27,7 +27,8 @@ probe bit for bit. If none does, it logs a warning and returns None, and
 the caller stays on ``score_record``.
 
 Both paths check a request with ``validate_request`` first, so neither
-scores a record the other would reject.
+scores a record the other would reject. ``request_error`` states the same
+rules as a column, for the stream's dead-letter route.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ from pyspark.ml import PipelineModel
 from pyspark.ml.feature import StringIndexerModel, VectorAssembler
 from pyspark.ml.linalg import Vectors
 from pyspark.ml.regression import GBTRegressionModel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -101,6 +102,26 @@ def validate_request(record: object, labels) -> tuple:
             f"expected one of {sorted(labels)}"
         )
     return tuple(row)
+
+
+def request_error(labels) -> Column:
+    """``validate_request``'s rules as a column over request rows: null for
+    a scorable row, else a string naming the first bad field, checked in
+    the same order: a null in any ``SCORE_REQUEST_SCHEMA`` field, then a
+    PlayType_lag outside ``labels``. A row it passes crashes neither the
+    VectorAssembler (null feature) nor the StringIndexer (unseen label)."""
+    labels = sorted(labels)
+    label = F.col("PlayType_lag")
+    unseen = F.concat(
+        F.lit("PlayType_lag: unseen label '"), label, F.lit(f"', expected one of {labels}")
+    )
+    return F.coalesce(
+        *(
+            F.when(F.col(f.name).isNull(), F.lit(f"{f.name}: null"))
+            for f in SCORE_REQUEST_SCHEMA.fields
+        ),
+        F.when(~label.isin(*labels), unseen),
+    )
 
 
 def score_best_play(

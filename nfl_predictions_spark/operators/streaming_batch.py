@@ -144,11 +144,12 @@ _Q36_INVALID_EVERY = 37
 
 
 def _run_score_route(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-    """Shared Q36 pipeline: simulated requests -> streaming foreachBatch
-    {validate, two-model score, success sink | dead-letter sink} (the
-    reference's NiFi flow, assets/flow.xml.gz, as one streaming query).
-    Returns the materialized (scored, dead_letter) sinks as batch
-    DataFrames, checkpointed so they outlive the temp sink dirs."""
+    """Shared Q36 pipeline: simulated requests -> ``score_and_route``'s two
+    file-sink queries, validated rows scored by both models into the
+    success sink and the rest into the dead-letter sink (the reference's
+    NiFi flow, assets/flow.xml.gz). Returns the materialized (scored,
+    dead_letter) sinks as batch DataFrames, checkpointed so they outlive
+    the temp sink dirs."""
     from nfl_predictions_spark.ml.queries import trained_models
     from nfl_predictions_spark.streaming.score import score_and_route
     from nfl_predictions_spark.streaming.simulate import simulated_requests, with_invalid

@@ -4,7 +4,8 @@ re-firing epochs in-process; these tests deliver the missing evidence —
 a REAL mid-stream failure (an exception thrown from inside foreachBatch
 kills the query between commits), then a restart from the SAME
 checkpoint directory, asserting the recovered sink + carried state
-equal the uninterrupted run row-for-row."""
+equal the uninterrupted run row-for-row. ``score_and_route`` gets the
+same treatment through a failing UDF column in its input stream."""
 
 from __future__ import annotations
 
@@ -206,3 +207,58 @@ def test_q341_crash_restart(spark):
     )
     assert _epochs(out) == [0, 1, 2, 3]
     assert _rows(spark, out, cols) == _rows(spark, base_out, cols)
+
+
+def test_score_and_route_crash_restart(spark, tmp_path):
+    """score_and_route's two file-sink queries: the input carries a UDF
+    column that raises on the second file while a marker file exists, so
+    the first run dies mid-stream. A rerun with the same ``out_root``
+    makes both sinks equal an uninterrupted run row for row, and a
+    further rerun with no new input adds no rows."""
+    import glob
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from nfl_predictions_spark.ml.queries import trained_models
+    from nfl_predictions_spark.streaming.score import score_and_route
+    from nfl_predictions_spark.streaming.simulate import simulated_requests, with_invalid
+
+    models = trained_models(spark)
+    in_dir = str(tmp_path / "in")
+    reqs = with_invalid(simulated_requests(spark.range(0, 300, 1, 3), "id"), every=37)
+    reqs.write.parquet(in_dir)
+    for i, f in enumerate(sorted(glob.glob(os.path.join(in_dir, "part-*.parquet")))):
+        os.utime(f, (1_700_000_000 + i,) * 2)  # file i holds seq 100*i .. 100*i+99
+    marker = str(tmp_path / "crash")
+
+    @F.udf("long")
+    def seq_or_crash(seq):
+        if seq >= 100 and os.path.exists(marker):
+            raise RuntimeError(f"injected crash at seq {seq}")
+        return seq
+
+    def run(out_root):
+        stream = (
+            spark.readStream.schema(reqs.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(in_dir)
+            .withColumn("seq", seq_or_crash("seq"))
+        )
+        return score_and_route(spark, stream, *models, str(tmp_path / out_root))
+
+    def rows(sink):
+        return sorted(tuple(r) for r in spark.read.parquet(sink).collect())
+
+    base = [rows(d) for d in run("base")]
+    assert len(base[0]) + len(base[1]) == 300 and len(base[1]) == 9
+
+    open(marker, "w").close()
+    with pytest.raises(StreamingQueryException):
+        run("out")
+    ok_dir = str(tmp_path / "out" / "scored")
+    assert rows(ok_dir) == [r for r in base[0] if r[0] < 100]  # only file 0 committed
+
+    os.remove(marker)
+    assert [rows(d) for d in run("out")] == base
+    assert [rows(d) for d in run("out")] == base

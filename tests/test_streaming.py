@@ -133,6 +133,103 @@ def test_score_route_invariants(spark):
     assert set(rows) <= {"dead_letter", "Passing Play", "Running Play"}
 
 
+#: seq -> request field nulled in the ``routed`` input.
+_NULLED = {5: "PlayType_lag", 6: "qtr", 7: "ydsnet", 8: "posteam"}
+
+
+@pytest.fixture(scope="module")
+def routed(spark, tmp_path_factory):
+    """One ``score_and_route`` run over 120 simulated requests in 2 files:
+    every 37th has an unseen label, and the ``_NULLED`` rows each carry a
+    null. Returns (input rows, scored sink, dead-letter sink)."""
+    from nfl_predictions_spark.ml.queries import trained_models
+    from nfl_predictions_spark.streaming.score import score_and_route
+    from nfl_predictions_spark.streaming.simulate import simulated_requests, with_invalid
+
+    root = tmp_path_factory.mktemp("routed")
+    reqs = with_invalid(simulated_requests(spark.range(0, 120, 1, 2), "id"), every=37)
+    for seq, col in _NULLED.items():
+        reqs = reqs.withColumn(col, F.when(F.col("seq") != seq, F.col(col)))
+    reqs.write.parquet(str(root / "in"))
+    stream = (
+        spark.readStream.schema(reqs.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(root / "in"))
+    )
+    ok_dir, dlq_dir = score_and_route(spark, stream, *trained_models(spark), str(root / "out"))
+    return (
+        spark.read.parquet(str(root / "in")),
+        spark.read.parquet(ok_dir),
+        spark.read.parquet(dlq_dir),
+    )
+
+
+def test_score_route_timeout_stops_queries(spark, routed, tmp_path, monkeypatch):
+    """A stream that does not finish in time raises, and the call leaves
+    none of its queries running."""
+    from nfl_predictions_spark.ml.queries import trained_models
+    from nfl_predictions_spark.streaming import score
+
+    requests = routed[0]
+    before = {q.id for q in spark.streams.active}
+    monkeypatch.setattr(score, "TIMEOUT_S", 0.001)
+    in_dir = os.path.dirname(requests.inputFiles()[0])
+    stream = spark.readStream.schema(requests.schema).parquet(in_dir)
+    with pytest.raises(TimeoutError):
+        score.score_and_route(spark, stream, *trained_models(spark), str(tmp_path))
+    assert [q.id for q in spark.streams.active if q.id not in before] == []
+
+
+def test_score_route_dead_letters_nulls_with_reason(routed):
+    """A null in any request field, the label included, routes the row to
+    the dead letter with a reason naming the field; an unseen label names
+    the label. Every input row lands in exactly one sink."""
+    requests, scored, dlq = routed
+    reasons = {r.seq: r.reason for r in dlq.collect()}
+    for seq, col in _NULLED.items():
+        assert reasons.pop(seq) == f"{col}: null"
+    assert sorted(reasons) == [0, 37, 74, 111]
+    assert all(r.startswith("PlayType_lag: unseen label 'Bogus'") for r in reasons.values())
+    ok = [r.seq for r in scored.collect()]
+    assert sorted(ok + list(reasons) + list(_NULLED)) == list(range(120))
+
+
+def test_score_route_matches_score_batch(spark, routed):
+    """Every scored row's best_play and 2 dp yards equal
+    ``ScoringService.score_batch`` on the same rows."""
+    from nfl_predictions_spark.api import ScoringService
+    from nfl_predictions_spark.ml.queries import trained_models
+
+    requests, scored, _ = routed
+    cols = [
+        "seq",
+        "best_play",
+        F.round("passing_yards", 2).alias("passing_yards"),
+        F.round("running_yards", 2).alias("running_yards"),
+    ]
+    service = ScoringService(spark, *trained_models(spark))
+    want = service.score_batch(requests.join(scored.select("seq"), "seq"))
+    got = sorted(tuple(r) for r in scored.select(*cols).collect())
+    assert len(got) == 120 - 4 - len(_NULLED)
+    assert got == sorted(tuple(r) for r in want.select(*cols).collect())
+
+
+def test_score_route_sink_schemas(routed):
+    """scored = input columns + passing_yards, running_yards, best_play;
+    dead_letter = input columns + reason."""
+    requests, scored, dlq = routed
+
+    def fields(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert fields(scored) == fields(requests) + [
+        ("passing_yards", "double"),
+        ("running_yards", "double"),
+        ("best_play", "string"),
+    ]
+    assert fields(dlq) == fields(requests) + [("reason", "string")]
+
+
 def test_simulated_requests_deterministic(spark):
     from nfl_predictions_spark.streaming.simulate import simulated_requests
 
