@@ -53,6 +53,11 @@ def _error(message: str) -> bytes:
 
 
 class ScoringService:
+    #: Seconds the HTTP handler waits on a client's socket before giving up.
+    HTTP_TIMEOUT_S = 5.0
+    #: Largest request body ``serve_http`` reads, in bytes.
+    HTTP_MAX_BODY = 64 * 1024
+
     def __init__(
         self,
         spark: SparkSession,
@@ -105,12 +110,19 @@ class ScoringService:
         and a bad ``Content-Length``, get a 400 (the reference's bare
         ``except`` swallowed them — a documented defect we do not
         reproduce); any other error in a POST gets a 500 JSON reply
-        rather than a dropped connection."""
+        rather than a dropped connection. The server is single-threaded,
+        so a stalled client holds it for at most ``HTTP_TIMEOUT_S``: a
+        body that stops arriving that long gets a 408, a request line
+        or headers that stall that long close the connection, and a
+        ``Content-Length`` above ``HTTP_MAX_BODY`` gets a 413 before the
+        body is read."""
         from http.server import BaseHTTPRequestHandler, HTTPServer
 
         service = self
 
         class _Handler(BaseHTTPRequestHandler):
+            timeout = service.HTTP_TIMEOUT_S
+
             def _reply(self, code: int, body: bytes, ctype: str):
                 self.send_response(code)
                 self.send_header("Content-Type", ctype)
@@ -132,6 +144,8 @@ class ScoringService:
             def do_POST(self):
                 try:
                     code, out, ctype = self._post()
+                except TimeoutError:
+                    code, out, ctype = 408, _error("request body timed out"), _JSON
                 except Exception as e:  # last resort: answer, never drop the connection
                     log.exception("POST %s failed", self.path)
                     code, out, ctype = 500, _error(f"{type(e).__name__}: {e}"), _JSON
@@ -141,6 +155,8 @@ class ScoringService:
                 length = self.headers.get("Content-Length", "0").strip()
                 if not length.isdecimal():
                     return 400, _error("Content-Length must be a non-negative integer"), _JSON
+                if int(length) > service.HTTP_MAX_BODY:
+                    return 413, _error(f"Content-Length above {service.HTTP_MAX_BODY}"), _JSON
                 body = self.rfile.read(int(length))
                 if self.path in ("/", "/index"):
                     from urllib.parse import parse_qs

@@ -14,17 +14,26 @@ gain aggregation from the same node parquet (round 5).
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nfl_predictions_spark.ml.features import build_features
-from nfl_predictions_spark.ml.pipeline import load_models, save_models, train_models
+from nfl_predictions_spark.ml.pipeline import (
+    MODEL_FORMAT,
+    load_models,
+    save_models,
+    train_models,
+)
 from nfl_predictions_spark.ml.score import GOLDEN_REQUEST, score_best_play
 from nfl_predictions_spark.ml.synthetic import synthetic_plays
 from nfl_predictions_spark.schemas import SCORE_REQUEST_SCHEMA
+
+log = logging.getLogger(__name__)
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
@@ -34,25 +43,28 @@ _TRAIN_PLAYS = 120
 _CACHE_ROOT = os.path.join(
     tempfile.gettempdir(),
     "nfl_predictions_spark",
-    f"models_g{_TRAIN_GAMES}x{_TRAIN_PLAYS}_v1",
+    # the local format belongs to the Spark version that wrote it
+    f"models_g{_TRAIN_GAMES}x{_TRAIN_PLAYS}_pyspark{pyspark.__version__}_{MODEL_FORMAT}",
 )
 
 
 #: in-process handle memo: (root, session id) -> loaded PipelineModels.
-#: PipelineModel.load is dozens of small metadata/parquet reads per
-#: stage (~1 s for the two ensembles); the reference loads models ONCE
-#: at boot (assets/app_nfl.py:337-338), never per request, so the
-#: engine keeps the deserialized handles for the life of the session.
-#: Keyed by session id because a JVM restart invalidates the handles.
+#: Loading launches no Spark job but still builds both ensembles in the
+#: JVM; the reference loads models ONCE at boot (assets/app_nfl.py:
+#: 337-338), never per request, so the engine keeps the deserialized
+#: handles for the life of the session. Keyed by session id because a
+#: JVM restart invalidates the handles.
 _LOADED_MODELS: dict = {}
 
 
 def trained_models(spark: SparkSession):
     """Train-or-load the two pipelines on the deterministic synthetic
-    plays table. Models are persisted in Spark's native PipelineModel
-    format (same on-disk contract as the reference's shipped artifacts)
-    and reloaded once per session — the reference loads models once
-    at boot (assets/app_nfl.py:337-338), never per query."""
+    plays table. Models are persisted by ``save_models`` in Spark ML's
+    local format (loading them launches no Spark job), under a cache key
+    that names the training size, the pyspark version and the format,
+    and are loaded once per session — the reference loads models once
+    at boot (assets/app_nfl.py:337-338), never per query. A cache that
+    fails to load is logged and retrained."""
     memo_key = (_CACHE_ROOT, spark.sparkContext.applicationId)
     cached = _LOADED_MODELS.get(memo_key)
     if cached is not None:
@@ -64,7 +76,7 @@ def trained_models(spark: SparkSession):
             _LOADED_MODELS[memo_key] = models
             return models
         except Exception:
-            pass
+            log.warning("model cache %s failed to load; retraining", _CACHE_ROOT, exc_info=True)
     plays = build_features(synthetic_plays(spark, _TRAIN_GAMES, _TRAIN_PLAYS)).persist()
     # The 40 GBT fit iterations each run small jobs; a 200-partition
     # shuffle default (the driver session's) adds pure overhead at this
@@ -252,32 +264,43 @@ ORDER BY l.event_id
 """
 
 
+def _gbt_dirs(spark: SparkSession) -> dict[str, str]:
+    """Each pipeline's GBT stage in Spark's standard layout — the
+    ``data`` (tree nodes) and ``treesMetadata`` parquet tables the
+    reference ships (the "fitted model as persisted dataset", PAPER.md
+    §1) — written once per model-cache generation by a plain
+    ``write().save()`` under ``_CACHE_ROOT``. The model cache itself
+    holds the local format, which is not parquet."""
+    out = {}
+    for name, pipeline in zip(("pass", "run"), trained_models(spark)):
+        path = os.path.join(_CACHE_ROOT, f"gbt_{name}")
+        # treesMetadata is the stage writer's last table
+        if not os.path.exists(os.path.join(path, "treesMetadata", "_SUCCESS")):
+            pipeline.stages[-1].write().overwrite().save(path)
+        out[name] = path
+    return out
+
+
 _Q87_NODES = os.path.join(_CACHE_ROOT, "q87_nodes.parquet")
 
 
 def dump_tree_nodes(spark: SparkSession) -> str:
-    """Normalize both pipelines' saved GBT tree tables (the reference's
-    own on-disk model schema: stages/2_GBTRegressor_*/data with treeID +
+    """Normalize both pipelines' saved GBT tree tables (``_gbt_dirs``:
+    the reference's own on-disk model schema, data with treeID +
     nodeData(gain, split.featureIndex, impurityStats)) into ONE parquet
     at a deterministic path: (model, treeID, fidx, feature, gain, cnt)
     for internal nodes, plus treeID=-1 dimension rows carrying the full
     8-feature list. Written once per model-cache generation (atomic
     tempdir rename, the q164 idiom); both the Spark query and the DuckDB
     oracle then read the SAME bytes."""
-    import glob as _glob
-
-    pass_model, run_model = trained_models(spark)
+    pass_model, _ = trained_models(spark)
     if os.path.exists(os.path.join(_Q87_NODES, "_SUCCESS")):
         return _Q87_NODES
     feats = list(pass_model.stages[-2].getInputCols())
     parts = []
-    for model_name, pipeline in (("pass", pass_model), ("run", run_model)):
-        (data_dir,) = _glob.glob(
-            os.path.join(_CACHE_ROOT, f"nfl_model_{model_name}", "stages",
-                         "*GBTRegressor*", "data")
-        )
+    for model_name, gbt_dir in _gbt_dirs(spark).items():
         nodes = (
-            spark.read.parquet(data_dir)
+            spark.read.parquet(os.path.join(gbt_dir, "data"))
             .select(
                 F.lit(model_name).alias("model"),
                 F.col("treeID"),
@@ -406,11 +429,11 @@ def _dump_scoring_frames(spark: SparkSession) -> tuple[str, str]:
     - nodes: every tree node of both saved ensembles, denormalized with
       its tree's boosting weight — (model, treeID, id, fidx, thr[],
       ncat, l, r, pred, weight). Leaf rows carry fidx = -1 (the saved
-      format's own marker). Read straight from the model's on-disk
-      ``data``/``treesMetadata`` parquet (layout as in the reference's
-      checkpoints, assets/static/assets/nfl_model_pass/stages/
-      2_GBTRegressor_*, which name the columns treeID/metadata/weights;
-      unnamed-tuple (_1/_2/_3) writers are also accepted).
+      format's own marker). Read from each GBT stage's ``data``/
+      ``treesMetadata`` parquet (``_gbt_dirs``; layout as in the
+      reference's checkpoints, assets/static/assets/nfl_model_pass/
+      stages/2_GBTRegressor_*, which name the columns treeID/metadata/
+      weights; unnamed-tuple (_1/_2/_3) writers are also accepted).
     - feats: the assembled 8-feature vector per request per model (the
       two StringIndexers order labels differently, so slot 7 differs) —
       (model, req_id, feats DOUBLE[8]). The deterministic prefix that
@@ -418,21 +441,17 @@ def _dump_scoring_frames(spark: SparkSession) -> tuple[str, str]:
       them lets the oracle verify the tree walk in isolation, the same
       shared-bytes discipline as q87's node dump.
     """
-    import glob as _glob
-
     if os.path.exists(os.path.join(_Q37D_NODES, "_SUCCESS")) and os.path.exists(
         os.path.join(_Q37D_FEATS, "_SUCCESS")
     ):
         return _Q37D_NODES, _Q37D_FEATS
     pass_model, run_model = trained_models(spark)
+    gbt_dirs = _gbt_dirs(spark)
     batch = _request_batch(spark).withColumn("req_id", _req_id_col())
 
     node_parts, feat_parts = [], []
     for model_name, pipeline in (("pass", pass_model), ("run", run_model)):
-        (gbt_dir,) = _glob.glob(
-            os.path.join(_CACHE_ROOT, f"nfl_model_{model_name}", "stages",
-                         "*GBTRegressor*")
-        )
+        gbt_dir = gbt_dirs[model_name]
         weights = _tree_weights(spark, gbt_dir)
         nodes = (
             spark.read.parquet(os.path.join(gbt_dir, "data"))

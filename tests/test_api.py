@@ -497,3 +497,47 @@ def test_http_bad_requests_get_json_errors(service, monkeypatch):
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_http_stalled_client_does_not_block_the_server(service):
+    """A client that stops sending its body holds the single-threaded
+    server for at most HTTP_TIMEOUT_S: it gets a 408, and a second
+    client's valid request is answered within the timeout plus 2 s. A
+    Content-Length above HTTP_MAX_BODY gets a 413 before any body."""
+    import http.client
+    import socket
+    import threading
+    import time
+
+    from nfl_predictions_spark.ml.score import GOLDEN_REQUEST
+
+    srv = service.serve_http()
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    port = srv.server_address[1]
+    deadline = service.HTTP_TIMEOUT_S + 2
+    try:
+        stalled = socket.create_connection(("127.0.0.1", port))
+        stalled.sendall(b"POST /api HTTP/1.0\r\nContent-Length: 100\r\n\r\n" + b" " * 10)
+        time.sleep(0.5)  # the server is now blocked reading the body
+        t0 = time.monotonic()
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=deadline)
+        conn.request("POST", "/api", json.dumps(GOLDEN_REQUEST))
+        resp = conn.getresponse()
+        assert resp.status == 200
+        assert json.loads(resp.read()) == service.score(dict(GOLDEN_REQUEST))
+        assert time.monotonic() - t0 < deadline
+        conn.close()
+        stalled.settimeout(deadline)
+        assert stalled.recv(4096).startswith(b"HTTP/1.0 408")
+        stalled.close()
+
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=deadline)
+        conn.putrequest("POST", "/api")
+        conn.putheader("Content-Length", str(service.HTTP_MAX_BODY + 1))
+        conn.endheaders()
+        resp = conn.getresponse()
+        assert resp.status == 413 and "Content-Length" in json.loads(resp.read())["error"]
+        conn.close()
+    finally:
+        srv.shutdown()
+        srv.server_close()

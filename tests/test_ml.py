@@ -317,3 +317,101 @@ def test_feature_importance_parity_with_independent_gain_walk(spark, models):
 
     mllib = np.array(gbt.featureImportances.toArray())
     assert np.allclose(total, mllib, atol=1e-12), (total, mllib)
+
+
+# ---------------------------------------------------------------------------
+# Model persistence: save_models/load_models own the on-disk form
+# ---------------------------------------------------------------------------
+
+
+def _local_format_flag(spark) -> bool:
+    return spark._jvm.org.apache.spark.ml.util.ReadWriteUtils.localSavingModeState().get()
+
+
+@pytest.fixture(scope="module")
+def saved_models(models, tmp_path_factory):
+    from nfl_predictions_spark.ml.pipeline import save_models
+
+    root = str(tmp_path_factory.mktemp("saved_models"))
+    save_models(*models, root)
+    return root
+
+
+def test_load_models_launches_no_spark_job(spark, saved_models):
+    """Loading a save_models directory reads the local format with plain
+    file I/O: zero Spark jobs (Spark's standard layout costs 26)."""
+    from nfl_predictions_spark.ml.pipeline import load_models
+
+    sc = spark.sparkContext
+    group = "load-models-jobs"
+    sc.setJobGroup(group, "load_models", interruptOnCancel=False)
+    try:
+        pass_model, run_model = load_models(saved_models)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert len(pass_model.stages) == len(run_model.stages) == 3
+
+
+def _assert_same_pipelines(pair, other):
+    for a, b in zip(pair, other):
+        assert list(a.stages[0].labels) == list(b.stages[0].labels)
+        assert a.stages[0].getHandleInvalid() == b.stages[0].getHandleInvalid() == "error"
+        assert a.stages[1].getInputCols() == b.stages[1].getInputCols()
+        assert a.stages[2].treeWeights == b.stages[2].treeWeights
+        assert a.stages[2].toDebugString == b.stages[2].toDebugString
+
+
+def test_saved_models_round_trip(spark, models, saved_models):
+    """A trained pair and its saved-and-reloaded pair are the same models:
+    same stage parameters, bit-identical batch predictions, and the
+    reloaded pair certifies for compiled scoring in the same order."""
+    from nfl_predictions_spark.api import ScoringService
+    from nfl_predictions_spark.ml.pipeline import load_models
+    from nfl_predictions_spark.ml.queries import _request_batch
+    from nfl_predictions_spark.schemas import SCORE_REQUEST_SCHEMA
+
+    reloaded = load_models(saved_models)
+    _assert_same_pipelines(models, reloaded)
+
+    batch = _request_batch(spark)
+    order = [f.name for f in SCORE_REQUEST_SCHEMA.fields]
+
+    def raw(service):
+        out = service.score_batch(batch).orderBy(*order)
+        return [(r.passing_yards.hex(), r.running_yards.hex(), r.best_play) for r in out.collect()]
+
+    trained, loaded = ScoringService(spark, *models), ScoringService(spark, *reloaded)
+    assert raw(trained) == raw(loaded)
+    assert loaded._compiled is not None
+    assert [m.order for m in loaded._compiled] == [m.order for m in trained._compiled]
+
+
+def test_standard_layout_still_loads(spark, models, tmp_path, caplog):
+    """Spark's standard layout (a plain write().save(), as the reference
+    ships) still loads through load_models, with one warning per model."""
+    from nfl_predictions_spark.ml.pipeline import load_models
+
+    for name, model in zip(("pass", "run"), models):
+        model.write().save(str(tmp_path / f"nfl_model_{name}"))
+    assert (tmp_path / "nfl_model_pass" / "metadata").is_dir()
+    with caplog.at_level("WARNING", logger="nfl_predictions_spark.ml.pipeline"):
+        loaded = load_models(str(tmp_path))
+    assert caplog.text.count("standard layout") == 2
+    _assert_same_pipelines(models, loaded)
+
+
+def test_local_format_flag_is_reset(spark, models, tmp_path):
+    """The local format is a JVM thread-local: save_models and
+    load_models leave it off, also when a load fails, so a later plain
+    write().save() still writes Spark's standard layout."""
+    from nfl_predictions_spark.ml.pipeline import load_models, save_models
+
+    save_models(*models, str(tmp_path))
+    assert _local_format_flag(spark) is False
+    load_models(str(tmp_path))
+    assert _local_format_flag(spark) is False
+    (tmp_path / "nfl_model_pass" / "metadata").write_text("not a model")
+    with pytest.raises(Exception):
+        load_models(str(tmp_path))
+    assert _local_format_flag(spark) is False
