@@ -9,21 +9,19 @@ bytes a concurrent session was still scanning: every fresh process
 rebuilt every table, and pytest racing an oracle sweep produced the
 q52/q81/CBO flake trio four rounds running (VERDICT r09 #6).
 
-New protocol, the _atomic_stage discipline extended to catalog tables:
+New protocol, ``state.atomic_stage`` extended to catalog tables:
 
 1. ADOPT — if the shared location already holds a complete copy
    (_SUCCESS present), register an EXTERNAL table pointing at it.
    Registration is metadata-only; no bytes move, no reader breaks.
-2. BUILD PRIVATELY — otherwise write through a session-private
-   external table at ``<location>.build<pid>`` (bucketed writes must
-   go through saveAsTable, so the temp table exists just long enough
-   to write; dropping an external table keeps its files).
-3. INSTALL ATOMICALLY — one ``os.rename`` onto the shared location.
-   The loser of a concurrent build keeps the winner's bytes and
-   discards its own. A husk left by an interrupted pre-atomic writer
-   (location exists without _SUCCESS) is cleared and the rename
-   retried once, mirroring graph._atomic_stage.
-4. REGISTER — the external table now points at immutable bytes.
+2. BUILD PRIVATELY — otherwise ``state.atomic_stage`` writes through a
+   session-private external table at its private build dir (bucketed
+   writes must go through saveAsTable, so the temp table exists just
+   long enough to write; dropping an external table keeps its files)
+   and renames the result onto the shared location. The loser of a
+   concurrent build keeps the winner's bytes; an incomplete leftover
+   at the location is cleared first.
+3. REGISTER — the external table now points at immutable bytes.
 
 Nothing in this path ever deletes a complete generation, so any number
 of concurrent sessions converge on one copy and all stay green.
@@ -32,9 +30,10 @@ of concurrent sessions converge on one copy and all stay green.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nfl_predictions_spark.state import atomic_stage
 
 
 def _ddl(df: DataFrame) -> str:
@@ -70,7 +69,7 @@ def ensure_catalog_table(
 ) -> None:
     """Make ``qualified`` exist in this session's catalog, backed by a
     complete shared copy at ``loc`` — adopting the on-disk copy when
-    present, else building privately and installing via atomic rename.
+    present, else building and installing it with ``atomic_stage``.
 
     ``build_df`` is a zero-arg callable returning the DataFrame to
     persist (called lazily: adoption never runs the build plan).
@@ -81,32 +80,21 @@ def ensure_catalog_table(
         return
     if os.path.exists(os.path.join(loc, "_SUCCESS")):
         ddl = _ddl(spark.read.parquet(loc))
-        _register(spark, qualified, loc, ddl, bucket)
-        return
+    else:
+        df = build_df()
+        ddl = _ddl(df)
+        tmp_name = f"{qualified}_build_{os.getpid()}"
 
-    df = build_df()
-    ddl = _ddl(df)
-    priv = f"{loc}.build{os.getpid()}"
-    tmp_name = f"{qualified}_build_{os.getpid()}"
-    shutil.rmtree(priv, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-    writer = df.write.mode("overwrite").option("path", priv).format("parquet")
-    if bucket is not None:
-        n, key, sort = bucket
-        writer = writer.bucketBy(n, key)
-        if sort:
-            writer = writer.sortBy(sort)
-    writer.saveAsTable(tmp_name)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
-    try:
-        os.rename(priv, loc)
-    except OSError:
-        if not os.path.exists(os.path.join(loc, "_SUCCESS")):
-            # interrupted pre-atomic writer left a husk: clear, retry
-            shutil.rmtree(loc, ignore_errors=True)
-            try:
-                os.rename(priv, loc)
-            except OSError:
-                pass  # a concurrent healer won; use its copy
-        shutil.rmtree(priv, ignore_errors=True)
+        def write(tgt: str) -> None:
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
+            writer = df.write.mode("overwrite").option("path", tgt).format("parquet")
+            if bucket is not None:
+                n, key, sort = bucket
+                writer = writer.bucketBy(n, key)
+                if sort:
+                    writer = writer.sortBy(sort)
+            writer.saveAsTable(tmp_name)
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
+
+        atomic_stage(write, loc)
     _register(spark, qualified, loc, ddl, bucket)

@@ -16,12 +16,12 @@ from __future__ import annotations
 
 import logging
 import os
-import tempfile
 
 import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nfl_predictions_spark import state
 from nfl_predictions_spark.ml.features import build_features
 from nfl_predictions_spark.ml.pipeline import (
     MODEL_FORMAT,
@@ -40,9 +40,8 @@ ORACLE: dict[str, str] = {}
 
 _TRAIN_GAMES = 24
 _TRAIN_PLAYS = 120
-_CACHE_ROOT = os.path.join(
-    tempfile.gettempdir(),
-    "nfl_predictions_spark",
+#: fixed at import: the q87/q37d oracle strings read files under it
+_CACHE_ROOT = state.path(
     # the local format belongs to the Spark version that wrote it
     f"models_g{_TRAIN_GAMES}x{_TRAIN_PLAYS}_pyspark{pyspark.__version__}_{MODEL_FORMAT}",
 )
@@ -319,11 +318,11 @@ def dump_tree_nodes(spark: SparkSession) -> str:
         list(enumerate(feats)), "fidx: int, feature: string"
     )
     out = parts[0].unionByName(parts[1]).join(F.broadcast(fmap), "fidx")
-    # graph._atomic_stage owns the build-dir + rename-with-self-heal
+    # state.atomic_stage owns the build-dir + rename-with-self-heal
     # idiom (one copy of the concurrency logic, not three)
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage
 
-    _atomic_stage(out.coalesce(1), _Q87_NODES)
+    atomic_stage(out.coalesce(1), _Q87_NODES)
     return _Q87_NODES
 
 
@@ -483,13 +482,13 @@ def _dump_scoring_frames(spark: SparkSession) -> tuple[str, str]:
             )
         )
 
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage
 
     for path, frame in (
         (_Q37D_NODES, node_parts[0].unionByName(node_parts[1])),
         (_Q37D_FEATS, feat_parts[0].unionByName(feat_parts[1])),
     ):
-        _atomic_stage(frame.coalesce(1), path)
+        atomic_stage(frame.coalesce(1), path)
     return _Q37D_NODES, _Q37D_FEATS
 
 

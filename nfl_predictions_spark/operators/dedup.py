@@ -1595,12 +1595,11 @@ def _shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     model. See q322's docstring for the diagonal islands merge."""
     import os
 
-    from nfl_predictions_spark.operators.extended import _staged_path
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage, staged_path
 
-    out = _staged_path(sf_dir, "shared_spans", sources=("documents",))
+    out = staged_path(sf_dir, "shared_spans", sources=("documents",))
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _atomic_stage(_shared_spans_frame(spark, sf_dir), out)
+        atomic_stage(_shared_spans_frame(spark, sf_dir), out)
     return spark.read.parquet(out)
 
 
@@ -1930,10 +1929,9 @@ def base_index(spark: SparkSession, sf_dir: str) -> dict:
     absorb)."""
     import os
 
-    from nfl_predictions_spark.operators.extended import _staged_path
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage, staged_path
 
-    idx_root = _staged_path(sf_dir, "neardup_base_index", sources=("documents",))
+    idx_root = staged_path(sf_dir, "neardup_base_index", sources=("documents",))
     app = spark.sparkContext.applicationId
 
     def comp(kind: str, build) -> DataFrame:
@@ -1942,7 +1940,7 @@ def base_index(spark: SparkSession, sf_dir: str) -> dict:
         if cached is not None:
             return cached
         if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            _atomic_stage(build(), out)
+            atomic_stage(build(), out)
         df = spark.read.parquet(out)
         _COMP_HANDLES[(app, out)] = df
         return df

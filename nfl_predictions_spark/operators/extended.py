@@ -7,12 +7,11 @@ user of a general-purpose engine reaches for daily.
 from __future__ import annotations
 
 import os
-import tempfile
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nfl_predictions_spark import state
 from nfl_predictions_spark.sources.tables import register_views, table
 
 QUERIES: dict = {}
@@ -205,70 +204,17 @@ def q47_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _staged_path(sf_dir: str, kind: str, sources: tuple = ("events",)) -> str:
-    """Staging dir under /tmp keyed by sf-dir basename + a size+mtime
-    fingerprint of the source parquet(s), with GC of superseded copies
-    of the same (kind, sf) — the q164/_cbo_tables/write_bucketed_tables
-    discipline (ADVICE r05 #2): a regenerated fixture at the same path
-    mints a new fingerprint and can never silently reuse stale staged
-    data."""
-    import hashlib
-    import shutil
-
-    fp = hashlib.md5()
-    for t in sources:
-        try:
-            st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-            fp.update(f"{t}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:
-            fp.update(f"{t}:missing".encode())
-    base = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark")
-    prefix = f"{kind}_{base}"
-    out = os.path.join(root, f"{prefix}_{fp.hexdigest()[:10]}")
-    # Deferred GC (ADVICE r06 #5): only reap superseded generations that
-    # have been quiet for GC_GRACE_S, so a concurrent session still
-    # scanning the previous generation (or a second sf_dir sharing a
-    # basename) is never pulled out from under a running query. Fresh
-    # supersessions survive until the next call after the grace window.
-    GC_GRACE_S = 1800.0
-    now = time.time()
-    try:
-        for name in os.listdir(root):
-            path = os.path.join(root, name)
-            if (name == prefix or name.startswith(prefix + "_")) and path != out:
-                try:
-                    if now - os.stat(path).st_mtime > GC_GRACE_S:
-                        shutil.rmtree(path, ignore_errors=True)
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    # Refresh last-access on the generation being handed out (ADVICE r07
-    # #4): reads don't update directory mtime, so a long-scanning session
-    # would otherwise see its generation reaped mid-query once a newer
-    # fingerprint appears and the 30-min grace elapses. Touching on every
-    # hand-out keys the grace window on last-use, not last-write.
-    try:
-        os.utime(out)
-    except OSError:
-        pass
-    return out
-
-
 def events_by_day_path(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once) the events table re-partitioned by event date —
     the layout that enables static and dynamic partition pruning."""
-    out = _staged_path(sf_dir, "events_by_day")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            table(spark, sf_dir, "events")
-            .withColumn("event_date", F.col("ts").cast("date"))
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(out)
-        )
+    out = state.staged_path(sf_dir, "events_by_day")
+    state.atomic_stage(
+        table(spark, sf_dir, "events")
+        .withColumn("event_date", F.col("ts").cast("date"))
+        .write.partitionBy("event_date")
+        .parquet,
+        out,
+    )
     return out
 
 
@@ -302,12 +248,11 @@ def q48_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q49_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON lines round-trip with an explicit schema (no inference scan):
     write a projection of events as JSONL, read it back typed."""
-    out = _staged_path(sf_dir, "events_json")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        ).write.mode("overwrite").json(out)
+    out = state.staged_path(sf_dir, "events_json")
+    state.atomic_stage(
+        table(spark, sf_dir, "events").select("event_id", "event_type", "value").write.json,
+        out,
+    )
     return (
         spark.read.json(out, schema="event_id long, event_type string, value double")
         .select("event_id", "event_type", "value")
@@ -342,16 +287,11 @@ def q50_exists_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q49b_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC round-trip: the second columnar format Spark ships natively
     (predicate pushdown + vectorized read, same as parquet)."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "nfl_predictions_spark",
-        f"events_orc_{os.path.basename(os.path.normpath(sf_dir))}",
+    out = state.staged_path(sf_dir, "events_orc")
+    state.atomic_stage(
+        table(spark, sf_dir, "events").select("event_id", "event_type", "value").write.orc,
+        out,
     )
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        ).write.mode("overwrite").orc(out)
     return (
         spark.read.orc(out)
         .select("event_id", "event_type", "value")
@@ -884,30 +824,24 @@ def q101_malformed_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantined. At 100 TB ingest, PERMISSIVE + a dead-letter filter on
     the corrupt column IS the data-quality gate (q36's dead-letter
     stream sink is the streaming half)."""
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "nfl_predictions_spark",
-        f"malformed_csv_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    marker = os.path.join(staged, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(staged, exist_ok=True)
-        rows = spark.range(2000).selectExpr(
-            "CASE WHEN id % 7 = 3 THEN concat('oops_', id) ELSE CAST(id AS STRING) "
-            "END AS id_str",
-            "concat('name_', id) AS name",
+    # the CSV is a function of nothing in sf_dir: one copy serves all
+    staged = state.path("malformed_csv")
+    state.atomic_stage(
+        spark.range(2000)
+        .selectExpr(
+            "concat_ws(',', CASE WHEN id % 7 = 3 THEN concat('oops_', id) "
+            "ELSE CAST(id AS STRING) END, concat('name_', id)) AS line"
         )
-        rows.selectExpr("concat_ws(',', id_str, name) AS line").coalesce(
-            1
-        ).write.mode("overwrite").text(staged + "/raw")
-        with open(marker, "w") as f:
-            f.write("ok")
+        .coalesce(1)
+        .write.text,
+        staged,
+    )
     schema = "id LONG, name STRING, _corrupt STRING"
     parsed = (
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(staged + "/raw")
+        .csv(staged)
     )
     return (
         parsed.groupBy(F.col("_corrupt").isNotNull().alias("is_bad"))
@@ -1782,20 +1716,17 @@ def calendar_dim_path(spark: SparkSession, sf_dir: str) -> str:
     no driver-side date math. Keyed on the events parquet's
     size+mtime fingerprint (ADVICE r05 #2) so a regenerated fixture
     can never reuse a stale calendar span."""
-    out = _staged_path(sf_dir, "calendar_dim")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            table(spark, sf_dir, "events")
-            .agg(
-                F.min(F.col("ts").cast("date")).alias("d0"),
-                F.max(F.col("ts").cast("date")).alias("d1"),
-            )
-            .select(F.explode(F.sequence("d0", "d1")).alias("cal_date"))
-            .withColumn("iso_week", F.weekofyear("cal_date"))
-            .write.mode("overwrite")
-            .parquet(out)
+    out = state.staged_path(sf_dir, "calendar_dim")
+    state.atomic_stage(
+        table(spark, sf_dir, "events")
+        .agg(
+            F.min(F.col("ts").cast("date")).alias("d0"),
+            F.max(F.col("ts").cast("date")).alias("d1"),
         )
+        .select(F.explode(F.sequence("d0", "d1")).alias("cal_date"))
+        .withColumn("iso_week", F.weekofyear("cal_date")),
+        out,
+    )
     return out
 
 
@@ -1995,20 +1926,12 @@ def _cbo_tables(spark: SparkSession, sf_dir: str) -> str:
     source fingerprint — the q52/q164 staged-store discipline, stale
     tags GC'd) so the cost-based optimizer has rowCount + column NDV/
     min/max statistics to reorder joins with."""
-    import hashlib
     import shutil
     from urllib.parse import urlparse
 
-    fp = hashlib.md5()
     srcs = ("customer", "orders", "nation")
-    for t in srcs:
-        try:
-            st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-            fp.update(f"{t}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:
-            fp.update(f"{t}:missing".encode())
     sf_base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    tag = f"{sf_base}_{fp.hexdigest()[:10]}"
+    tag = f"{sf_base}_{state.fingerprint(sf_dir, srcs)}"
     spark.sql("CREATE DATABASE IF NOT EXISTS cbostats")
     done = {
         t[0]

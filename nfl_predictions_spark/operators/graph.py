@@ -55,52 +55,18 @@ def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified pair relation exactly once and every downstream consumer
     reads the table; this mirrors that, with the copurchase_edges
     fingerprint discipline (documents.parquet size+mtime key, deferred
-    GC via extended._staged_path) so a regenerated fixture can never
+    GC via state.staged_path) so a regenerated fixture can never
     reuse stale pairs. q39b itself stays the unstaged correctness
     baseline the oracle replays."""
     from nfl_predictions_spark.operators.dedup import q39b_ngram_jaccard_pairs
-    from nfl_predictions_spark.operators.extended import _staged_path
+    from nfl_predictions_spark.state import atomic_stage, staged_path
 
-    out = _staged_path(sf_dir, "neardup_pairs", sources=("documents",))
+    out = staged_path(sf_dir, "neardup_pairs", sources=("documents",))
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _atomic_stage(
+        atomic_stage(
             q39b_ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2"), out
         )
     return spark.read.parquet(out).select("d1", "d2")
-
-
-def _atomic_stage(frame: DataFrame, out: str) -> None:
-    """Materialize ``frame`` at ``out`` via build-dir + rename (the
-    q37d/q41f idiom): two concurrent sessions that both find _SUCCESS
-    missing each build privately and the loser's rename fails — never
-    an overwrite that deletes the winner's in-flight files out from
-    under a running reader.
-
-    Self-healing (ADVICE r07 #2): a rename failure does NOT always mean
-    "lost the race" — a pre-atomic writer interrupted mid-copy can leave
-    ``out`` existing WITHOUT _SUCCESS, which would make every future
-    rename fail with ENOTEMPTY while callers silently read the partial
-    parquet. On failure we check for _SUCCESS inside the existing
-    target; a complete winner is reused, an incomplete husk is removed
-    and the rename retried once."""
-    import shutil
-    import tempfile
-
-    root = os.path.dirname(out)
-    os.makedirs(root, exist_ok=True)
-    build = tempfile.mkdtemp(prefix=".stage_", dir=root)
-    tgt = os.path.join(build, "data")
-    frame.write.mode("overwrite").parquet(tgt)
-    try:
-        os.rename(tgt, out)
-    except OSError:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            shutil.rmtree(out, ignore_errors=True)
-            try:
-                os.rename(tgt, out)
-            except OSError:
-                pass  # a concurrent healer installed a complete copy
-    shutil.rmtree(build, ignore_errors=True)
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,15 +90,11 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from urllib.parse import urlparse
 
     from nfl_predictions_spark.sources.tables import table
-
-    import hashlib
+    from nfl_predictions_spark.state import fingerprint
 
     try:
-        st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-        fp_src = f"lineitem:{st.st_size}:{st.st_mtime_ns}"
-        li_bytes = st.st_size
+        li_bytes = os.path.getsize(os.path.join(sf_dir, "lineitem.parquet"))
     except OSError:
-        fp_src = "lineitem:missing"
         li_bytes = 0
     # edges ≈ 2 distinct pairs per lineitem row, two 8-byte ids each —
     # size buckets off the lineitem parquet bytes like skew.py does
@@ -141,7 +103,7 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets *= 2
     tag = (
         os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-        + f"_b{n_buckets}_{hashlib.md5(fp_src.encode()).hexdigest()[:10]}"
+        + f"_b{n_buckets}_{fingerprint(sf_dir, ('lineitem',))}"
     )
     tbl = f"edges_{tag}"
     spark.sql("CREATE DATABASE IF NOT EXISTS buckets")
@@ -1047,7 +1009,7 @@ def q294_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-free."""
     import os
 
-    from nfl_predictions_spark.operators.extended import _staged_path
+    from nfl_predictions_spark.state import atomic_stage, staged_path
     from nfl_predictions_spark.sources.tables import table
 
     # Repeat-co-purchase edge derivation staged once per fixture (the
@@ -1055,7 +1017,7 @@ def q294_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join + per-pair distinct-order count was re-running on
     # every CONSTRUCTION (~4 s of q294's bench time at sf0.1); the
     # peel loop below only ever needs the materialized edge list.
-    out = _staged_path(sf_dir, "repeat_copurchase", sources=("lineitem",))
+    out = staged_path(sf_dir, "repeat_copurchase", sources=("lineitem",))
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         a, b = li.alias("a"), li.alias("b")
@@ -1069,7 +1031,7 @@ def q294_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("m") >= 2)
             .select("s", "t")
         )
-        _atomic_stage(
+        atomic_stage(
             ep.select(F.col("s").alias("src"), F.col("t").alias("dst"))
             .unionByName(
                 ep.select(F.col("t").alias("src"), F.col("s").alias("dst"))

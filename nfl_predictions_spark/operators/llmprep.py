@@ -2359,15 +2359,14 @@ def _kn_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     q321 (per-document perplexity filter) previously each re-derived the
     identical model — the train-once/score-many split every production
     LM pipeline makes. Keyed by the documents parquet's fingerprint via
-    extended._staged_path, installed with graph._atomic_stage."""
+    state.staged_path, installed with state.atomic_stage."""
     import os
 
-    from nfl_predictions_spark.operators.extended import _staged_path
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage, staged_path
 
-    out = _staged_path(sf_dir, "kn_bigram_model", sources=("documents",))
+    out = staged_path(sf_dir, "kn_bigram_model", sources=("documents",))
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _atomic_stage(_kn_model_frame(spark, sf_dir), out)
+        atomic_stage(_kn_model_frame(spark, sf_dir), out)
     return spark.read.parquet(out)
 
 

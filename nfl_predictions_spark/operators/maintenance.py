@@ -12,11 +12,11 @@ dominates scheduling).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nfl_predictions_spark import state
 from nfl_predictions_spark.sources.tables import table
 
 QUERIES: dict = {}
@@ -34,11 +34,9 @@ def _q(name: str, sql: str | None = None):
 
 
 def _tmp(sf_dir: str, leaf: str) -> str:
-    return os.path.join(
-        tempfile.gettempdir(),
-        "nfl_predictions_spark",
-        f"{leaf}_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    """Staged dir of ``leaf`` = ``<what>_<source table>``, keyed on that
+    table's fingerprint."""
+    return state.staged_path(sf_dir, leaf, sources=(leaf.rsplit("_", 1)[1],))
 
 
 @_q(
@@ -58,8 +56,13 @@ def q81_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     across queries and sessions."""
     from nfl_predictions_spark.catalog import ensure_catalog_table
 
-    name = f"nflspark_orders_{os.path.basename(os.path.normpath(sf_dir)).replace('.', '_')}"
     path = _tmp(sf_dir, "catalog_orders")
+    base = os.path.basename(os.path.normpath(sf_dir))
+    # one name per fixture, like the path: a same-named fixture elsewhere
+    # must not answer from this one's registered table
+    name = f"nflspark_orders_{base}_{state.fingerprint(sf_dir, ('orders',))}".replace(
+        ".", "_"
+    )
     # adopt-or-build (VERDICT r09 #6): a complete shared copy is
     # registered, never overwritten under a concurrent reader
     ensure_catalog_table(
@@ -125,14 +128,12 @@ def q82_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated by the rewrite; the ``compacted`` column additionally
     pins that the file count actually dropped below the staged count."""
     staged = _tmp(sf_dir, "compaction_events")
-    marker = os.path.join(staged, "_COMPACTED")
-    if not os.path.exists(marker):
-        table(spark, sf_dir, "events").repartition(64).write.mode("overwrite").parquet(
-            staged
-        )
-        compact(spark, staged)
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    def write(tgt: str) -> None:
+        table(spark, sf_dir, "events").repartition(64).write.parquet(tgt)
+        compact(spark, tgt)
+
+    state.atomic_stage(write, staged)
     n_after = sum(1 for f in os.listdir(staged) if f.endswith(".parquet"))
     return (
         spark.read.parquet(staged)
@@ -170,22 +171,20 @@ def q93_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns only get ADDED, readers merge footers (an O(files) driver
     cost — which is why production tables pin the merged schema in a
     catalog instead of re-inferring per query; q81 is that half)."""
-    src = table(spark, sf_dir, "orders")
     path = _tmp(sf_dir, "schema_evo_orders")
-    marker = os.path.join(path, "_V2_DONE")
-    if not os.path.exists(marker):
-        v1 = src.filter(F.col("o_orderkey") % 2 == 0).select(
+
+    def write(tgt: str) -> None:
+        src = table(spark, sf_dir, "orders")
+        src.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_orderstatus"
-        )
-        v2 = src.filter(F.col("o_orderkey") % 2 != 0).select(
+        ).write.parquet(tgt)
+        src.filter(F.col("o_orderkey") % 2 != 0).select(
             "o_orderkey",
             "o_orderstatus",
             F.concat(F.lit("v2:"), F.col("o_orderpriority")).alias("o_note"),
-        )
-        v1.write.mode("overwrite").parquet(path)
-        v2.write.mode("append").parquet(path)
-        with open(marker, "w") as f:
-            f.write("ok")
+        ).write.mode("append").parquet(tgt)
+
+    state.atomic_stage(write, path)
     merged = spark.read.option("mergeSchema", "true").parquet(path)
     return (
         merged.groupBy("o_orderstatus")

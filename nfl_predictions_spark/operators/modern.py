@@ -19,11 +19,11 @@ engine-added surface, inventoried in SURVEY §8.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nfl_predictions_spark import state
 from nfl_predictions_spark.sources.tables import register_views, table
 
 QUERIES: dict = {}
@@ -249,12 +249,8 @@ def q77_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently parseable.
     """
     src = table(spark, sf_dir, "part")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "nfl_predictions_spark",
-        f"xml_roundtrip_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    src.write.mode("overwrite").format("xml").option("rowTag", "part").save(out)
+    out = state.staged_path(sf_dir, "xml_roundtrip", sources=("part",))
+    state.atomic_stage(src.write.format("xml").option("rowTag", "part").save, out)
     back = spark.read.format("xml").option("rowTag", "part").schema(src.schema).load(out)
     return (
         back.groupBy("p_brand")
@@ -301,12 +297,10 @@ def q78_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pathGlobFilter/modifiedAfter, recursiveFileLookup for partitioned
     layouts.
     """
-    from nfl_predictions_spark.operators.extended import _staged_path
+    out = state.staged_path(sf_dir, "doc_blobs", sources=("documents",))
 
-    out = _staged_path(sf_dir, "doc_blobs", sources=("documents",))
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
+    def write(tgt: str) -> None:
+        os.makedirs(tgt)
         rows = (
             table(spark, sf_dir, "documents")
             .where(F.col("doc_id") < _BLOB_DOCS)
@@ -314,10 +308,11 @@ def q78_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
         for r in rows:
-            with open(os.path.join(out, f"doc_{r.doc_id:05d}.bin"), "wb") as fh:
+            with open(os.path.join(tgt, f"doc_{r.doc_id:05d}.bin"), "wb") as fh:
                 fh.write(r.text.encode("utf-8"))
-        with open(marker, "w"):
-            pass
+        open(os.path.join(tgt, "_SUCCESS"), "w").close()
+
+    state.atomic_stage(write, out)
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")

@@ -17,14 +17,12 @@ and the verified §1.4 semantics), Q25's tie rule is
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nfl_predictions_spark import state
 from nfl_predictions_spark.functions.scalars import davg, dsum, month_day
 from nfl_predictions_spark.schemas import TESTDATA_SCHEMAS
 from nfl_predictions_spark.sources.tables import table
@@ -65,8 +63,8 @@ def q02_scan_csv_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round-trip with an explicit StructType — the reference reads its
     fact table as a headerless untyped CSV (assets/app_nfl.py:42-62); the
     engine reads CSV with a declared schema, no inference scan."""
-    out = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark", "q02_region_csv")
-    table(spark, sf_dir, "region").write.mode("overwrite").csv(out)
+    out = state.staged_path(sf_dir, "region_csv", sources=("region",))
+    state.atomic_stage(table(spark, sf_dir, "region").write.csv, out)
     return (
         spark.read.csv(out, schema=TESTDATA_SCHEMAS["region"], header=False)
         .orderBy("r_regionkey")

@@ -21,7 +21,6 @@ rewrites are pure execution-strategy changes.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -157,18 +156,11 @@ def write_bucketed_tables(
     stale bucketed copy)."""
     if n_buckets is None:
         n_buckets = _n_buckets_for(sf_dir)
-    import hashlib
+    from nfl_predictions_spark.state import fingerprint
 
-    fp = hashlib.md5()
-    for t in ("orders", "lineitem"):
-        try:
-            st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-            fp.update(f"{t}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:
-            fp.update(f"{t}:missing".encode())
     tag = (
         os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-        + f"_b{n_buckets}_{fp.hexdigest()[:10]}"
+        + f"_b{n_buckets}_{fingerprint(sf_dir, ('orders', 'lineitem'))}"
     )
     spark.sql("CREATE DATABASE IF NOT EXISTS buckets")
     done = {t[0] for t in spark.sql("SHOW TABLES IN buckets").select("tableName").collect()}

@@ -19,9 +19,12 @@ reference's only "dimension" is the static play-type lookup in
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nfl_predictions_spark import state
 from nfl_predictions_spark.sources.tables import table
 
 QUERIES: dict = {}
@@ -279,10 +282,6 @@ def q164_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     query; the per-run work is O(|delta|) plus a |nations|-sized merge.
     Sums ride exact DECIMAL(18,2) so merge order cannot move cents.
     """
-    import os
-    import shutil
-    import tempfile
-
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nat = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     orders = table(spark, sf_dir, "orders").select(
@@ -290,46 +289,19 @@ def q164_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cutoff = F.lit(_MV_CUTOFF).cast("timestamp")
 
-    # Key the view store by a cheap data fingerprint (source parquet
-    # sizes + mtimes), not just the sf_dir basename: if the fixture data
-    # at the same path is regenerated, a stale base would silently merge
-    # into wrong totals while the oracle recomputes fresh.
-    import hashlib
-
-    fp = hashlib.md5()
-    for tbl in ("orders", "customer", "nation"):
-        p = os.path.join(sf_dir, f"{tbl}.parquet")
-        try:
-            st = os.stat(p)
-            fp.update(f"{tbl}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:
-            fp.update(f"{tbl}:missing".encode())
-    sf_base = os.path.basename(os.path.normpath(sf_dir))
-    key = f"{sf_base}_{fp.hexdigest()[:12]}"
-    mv_dir = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark", "mv")
-    root = os.path.join(mv_dir, f"nation_rev_{key}")
-    # GC superseded stores for THIS sf_dir (ADVICE r04 #3): each fixture
-    # regeneration mints a new fingerprint; old copies would otherwise
-    # accumulate on disk forever. Same sf prefix + different tag == stale.
-    if os.path.isdir(mv_dir):
-        for d in os.listdir(mv_dir):
-            if d.startswith(f"nation_rev_{sf_base}_") and d != f"nation_rev_{key}":
-                shutil.rmtree(os.path.join(mv_dir, d), ignore_errors=True)
-    store = os.path.join(root, "base")
-    marker = os.path.join(root, "_done")
-    if not os.path.exists(marker):
-        os.makedirs(os.path.dirname(root), exist_ok=True)
-        build = tempfile.mkdtemp(
-            prefix=f".nation_rev_{key}_", dir=os.path.dirname(root)
-        )
-        _mv_agg(
-            orders.where(F.col("o_orderdate") < cutoff), cust, nat
-        ).write.mode("overwrite").parquet(os.path.join(build, "base"))
-        open(os.path.join(build, "_done"), "w").close()
-        try:
-            os.rename(build, root)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)  # lost the race: reuse winner
+    # Key the view store by a source-data fingerprint, not just the
+    # sf_dir basename: if the fixture data at the same path is
+    # regenerated, a stale base would silently merge into wrong totals
+    # while the oracle recomputes fresh.
+    store = os.path.join(
+        state.staged_path(
+            sf_dir, os.path.join("mv", "nation_rev"), ("orders", "customer", "nation")
+        ),
+        "base",
+    )
+    state.atomic_stage(
+        _mv_agg(orders.where(F.col("o_orderdate") < cutoff), cust, nat), store
+    )
 
     base = spark.read.parquet(store)
     delta = _mv_agg(orders.where(F.col("o_orderdate") >= cutoff), cust, nat)

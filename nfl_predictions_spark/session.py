@@ -53,9 +53,9 @@ def get_spark(app_name: str = "nfl_predictions_spark", master: str | None = None
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # The UI is off by default (test speed); bench.py turns it on via
-        # SPARK_GRAFT_UI=true to read per-stage shuffle/spill metrics from
-        # the status REST API.
+        # The UI is off by default (test speed; perfbench/common.py pins
+        # SPARK_GRAFT_UI=false). SPARK_GRAFT_UI=true turns it on, to read
+        # per-stage shuffle/spill metrics from the status REST API.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.ui.retainedStages", "20000")
         .config("spark.ui.retainedJobs", "20000")

@@ -94,7 +94,7 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> None:
 #: ~25 s across a full bench (optimization round 11). The data is still
 #: read from the parquet bytes at every execution; nothing is precomputed.
 #: The fingerprint is the source parquet's (st_size, st_mtime_ns) — the
-#: _staged_path discipline (ADVICE r11 #1): a fixture regenerated at the
+#: state.fingerprint discipline (ADVICE r11 #1): a fixture regenerated at the
 #: same path mid-session mints a NEW handle instead of serving the stale
 #: file listing the first handle pinned; the superseded entry (and its
 #: spread() decisions) is evicted.

@@ -21,10 +21,12 @@ import glob
 import os
 import shutil
 import tempfile
+from typing import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nfl_predictions_spark import state
 from nfl_predictions_spark.sources.tables import table
 
 #: Events whose id hits this modulus are re-sent in the following chunk
@@ -38,69 +40,68 @@ def _events_ltz(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def _ranked(df: DataFrame, n_chunks: int, *order: str) -> DataFrame:
+    """``df`` with a ``chunk`` column in [0, n_chunks): exact contiguous
+    ranges of the ``order`` rank, so the split is deterministic."""
+    n = df.count()
+    w = Window.orderBy(*order)
+    return df.withColumn(
+        "chunk", ((F.row_number().over(w) - 1) * n_chunks / n).cast("long")
+    )
+
+
+def _split(ranked: DataFrame, n_chunks: int) -> Iterator[DataFrame]:
+    for i in range(n_chunks):
+        yield ranked.filter(F.col("chunk") == i).drop("chunk")
+
+
+def _stage_chunks(
+    sf_dir: str, kind: str, sources: tuple, parts: Callable[[], Iterable[DataFrame]]
+) -> str:
+    """Stage the frames ``parts()`` yields as ``in/chunkNNN.parquet``, one
+    file each, and return the ``in`` dir. The file source reads files in
+    (mtime, path) order, so each chunk gets an increasing mtime: arrival
+    order is chunk order. Keyed on the sources' fingerprint and installed
+    by ``state.atomic_stage``, so a reader sees every chunk or none, and
+    ``parts`` runs only when the chunks are not staged yet."""
+    out = state.staged_path(sf_dir, os.path.join("stream", kind), sources)
+
+    def write(tgt: str) -> None:
+        in_dir = os.path.join(tgt, "in")
+        tmpout = os.path.join(tgt, "tmpout")
+        os.makedirs(in_dir)
+        for i, part in enumerate(parts()):
+            part.coalesce(1).write.mode("overwrite").parquet(tmpout)
+            dst = os.path.join(in_dir, f"chunk{i:03d}.parquet")
+            shutil.move(glob.glob(os.path.join(tmpout, "part-*.parquet"))[0], dst)
+            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        shutil.rmtree(tmpout, ignore_errors=True)
+        open(os.path.join(tgt, "_SUCCESS"), "w").close()
+
+    state.atomic_stage(write, out)
+    return os.path.join(out, "in")
+
+
 def stage_event_chunks(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4, with_dups: bool = True
 ) -> str:
-    """Write events as n time-ordered chunk files; returns the input dir.
+    """Write events as n time-ordered chunk files (ties broken by id);
+    returns the input dir. With ``with_dups``, events whose id hits
+    ``DUP_MODULUS`` are re-sent in the following chunk."""
 
-    Cached per (sf_dir, n_chunks, with_dups) under /tmp — rebuilt only
-    if absent. Chunk boundaries come from exact ts quantiles so the
-    split is deterministic. The build happens in a process-private temp
-    dir that is renamed into place as a unit, so a concurrent reader
-    either sees the complete staged input or none of it — never a
-    half-written chunk set.
-    """
-    key = f"{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}_d{int(with_dups)}"
-    base = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark", "stream")
-    root = os.path.join(base, key)
-    in_dir = os.path.join(root, "in")
-    marker = os.path.join(root, "_done")
-    if os.path.exists(marker):
-        return in_dir
-    os.makedirs(base, exist_ok=True)
-    build_root = tempfile.mkdtemp(prefix=f".{key}_build_", dir=base)
-    build_in = os.path.join(build_root, "in")
-    os.makedirs(build_in)
+    def parts():
+        ranked = _ranked(_events_ltz(spark, sf_dir), n_chunks, "ts", "event_id")
+        for i, part in enumerate(_split(ranked, n_chunks)):
+            if with_dups and i > 0:
+                prev = ranked.filter(
+                    (F.col("chunk") == i - 1) & (F.col("event_id") % DUP_MODULUS == 0)
+                ).drop("chunk")
+                part = part.unionByName(prev)
+            yield part
 
-    df = _events_ltz(spark, sf_dir)
-    n = df.count()
-    # Exact chunk assignment by event-time rank (ties broken by id).
-    from pyspark.sql import Window
-
-    w = Window.orderBy("ts", "event_id")
-    ranked = df.withColumn(
-        "chunk", ((F.row_number().over(w) - 1) * n_chunks / n).cast("int")
+    return _stage_chunks(
+        sf_dir, f"events_c{n_chunks}_d{int(with_dups)}", ("events",), parts
     )
-    for i in range(n_chunks):
-        part = ranked.filter(F.col("chunk") == i).drop("chunk")
-        if with_dups and i > 0:
-            prev = ranked.filter(
-                (F.col("chunk") == i - 1) & (F.col("event_id") % DUP_MODULUS == 0)
-            ).drop("chunk")
-            part = part.unionByName(prev)
-        tmpout = os.path.join(build_root, "tmpout")
-        part.coalesce(1).write.mode("overwrite").parquet(tmpout)
-        src = glob.glob(os.path.join(tmpout, "part-*.parquet"))[0]
-        dst = os.path.join(build_in, f"chunk{i:03d}.parquet")
-        shutil.move(src, dst)
-        # File source processes files in (mtime, path) order; pin an
-        # increasing mtime so arrival order == event-time order.
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(os.path.join(build_root, "tmpout"), ignore_errors=True)
-    with open(os.path.join(build_root, "_done"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(build_root, root)
-    except OSError:
-        if os.path.exists(marker):
-            # Lost the race to a concurrent complete build — use theirs.
-            shutil.rmtree(build_root, ignore_errors=True)
-        else:
-            # A stale half-build (crashed process) is squatting on the
-            # path; replace it with the complete one.
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(build_root, root)
-    return in_dir
 
 
 def events_file_stream(
@@ -141,102 +142,32 @@ def checkpoint_dir() -> str:
 
 
 def stage_document_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Documents as n doc_id-ordered chunk files (contiguous id ranges,
-    increasing mtimes) — the corpus-ingest stream: arrival order ==
-    doc_id order, so "first seen wins" dedup equals "lowest doc_id
-    wins". Same atomic build-then-rename staging as the event chunks."""
-    key = f"docs_{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}"
-    base = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark", "stream")
-    root = os.path.join(base, key)
-    in_dir = os.path.join(root, "in")
-    marker = os.path.join(root, "_done")
-    if os.path.exists(marker):
-        return in_dir
-    os.makedirs(base, exist_ok=True)
-    build_root = tempfile.mkdtemp(prefix=f".{key}_build_", dir=base)
-    build_in = os.path.join(build_root, "in")
-    os.makedirs(build_in)
+    """Documents as n doc_id-ordered chunk files — the corpus-ingest
+    stream: arrival order == doc_id order, so "first seen wins" dedup
+    equals "lowest doc_id wins"."""
 
-    df = table(spark, sf_dir, "documents")
-    n = df.count()
-    from pyspark.sql import Window
+    def parts():
+        docs = table(spark, sf_dir, "documents")
+        return _split(_ranked(docs, n_chunks, "doc_id"), n_chunks)
 
-    w = Window.orderBy("doc_id")
-    ranked = df.withColumn(
-        "chunk", ((F.row_number().over(w) - 1) * n_chunks / n).cast("int")
-    )
-    for i in range(n_chunks):
-        part = ranked.filter(F.col("chunk") == i).drop("chunk")
-        tmpout = os.path.join(build_root, "tmpout")
-        part.coalesce(1).write.mode("overwrite").parquet(tmpout)
-        src = glob.glob(os.path.join(tmpout, "part-*.parquet"))[0]
-        dst = os.path.join(build_in, f"chunk{i:03d}.parquet")
-        shutil.move(src, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(os.path.join(build_root, "tmpout"), ignore_errors=True)
-    with open(os.path.join(build_root, "_done"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(build_root, root)
-    except OSError:
-        if os.path.exists(marker):
-            shutil.rmtree(build_root, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(build_root, root)
-    return in_dir
+    return _stage_chunks(sf_dir, f"docs_c{n_chunks}", ("documents",), parts)
 
 
 def stage_recrawl_chunks(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4
 ) -> str:
     """The q327/q332 derived re-crawl batch as n batch_id-ordered chunk
-    files (contiguous rank ranges, increasing mtimes), each row carrying
-    its chunk index — the incremental-dedup ingest stream. Same atomic
-    build-then-rename staging as the event/document chunks; the chunk
-    split formula matches the q332 oracle's chunkmap CTE exactly."""
+    files, each row carrying its chunk index — the incremental-dedup
+    ingest stream. The chunk split formula matches the q332 oracle's
+    chunkmap CTE exactly."""
     from nfl_predictions_spark.operators.dedup import recrawl_batch
 
-    key = f"recrawl_{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}"
-    base = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark", "stream")
-    root = os.path.join(base, key)
-    in_dir = os.path.join(root, "in")
-    marker = os.path.join(root, "_done")
-    if os.path.exists(marker):
-        return in_dir
-    os.makedirs(base, exist_ok=True)
-    build_root = tempfile.mkdtemp(prefix=f".{key}_build_", dir=base)
-    build_in = os.path.join(build_root, "in")
-    os.makedirs(build_in)
+    def parts():
+        batch = recrawl_batch(table(spark, sf_dir, "documents"))
+        ranked = _ranked(batch, n_chunks, "batch_id")
+        return (ranked.filter(F.col("chunk") == i) for i in range(n_chunks))
 
-    df = recrawl_batch(table(spark, sf_dir, "documents"))
-    n = df.count()
-    from pyspark.sql import Window
-
-    w = Window.orderBy("batch_id")
-    ranked = df.withColumn(
-        "chunk", ((F.row_number().over(w) - 1) * n_chunks / n).cast("long")
-    )
-    for i in range(n_chunks):
-        part = ranked.filter(F.col("chunk") == i)
-        tmpout = os.path.join(build_root, "tmpout")
-        part.coalesce(1).write.mode("overwrite").parquet(tmpout)
-        src = glob.glob(os.path.join(tmpout, "part-*.parquet"))[0]
-        dst = os.path.join(build_in, f"chunk{i:03d}.parquet")
-        shutil.move(src, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(os.path.join(build_root, "tmpout"), ignore_errors=True)
-    with open(os.path.join(build_root, "_done"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(build_root, root)
-    except OSError:
-        if os.path.exists(marker):
-            shutil.rmtree(build_root, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(build_root, root)
-    return in_dir
+    return _stage_chunks(sf_dir, f"recrawl_c{n_chunks}", ("documents",), parts)
 
 
 def recrawl_file_stream(
@@ -270,56 +201,19 @@ def stage_vector_chunks(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4
 ) -> str:
     """The q337 absorbed vector batch (element-reversed embeddings in
-    the disjoint +_ANN_OFF id space) as n vec_id-ordered chunk files
-    with increasing mtimes — the vector-DB ingest stream. Same atomic
-    build-then-rename staging as the event/document/recrawl chunks."""
+    the disjoint +_ANN_OFF id space) as n vec_id-ordered chunk files —
+    the vector-DB ingest stream."""
     from nfl_predictions_spark.operators.similarity import _ANN_OFF
-
-    key = f"vecingest_{os.path.basename(os.path.normpath(sf_dir))}_c{n_chunks}"
-    base = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark", "stream")
-    root = os.path.join(base, key)
-    in_dir = os.path.join(root, "in")
-    marker = os.path.join(root, "_done")
-    if os.path.exists(marker):
-        return in_dir
-    os.makedirs(base, exist_ok=True)
-    build_root = tempfile.mkdtemp(prefix=f".{key}_build_", dir=base)
-    build_in = os.path.join(build_root, "in")
-    os.makedirs(build_in)
-
     from nfl_predictions_spark.sources.tables import spread
 
-    df = spread(table(spark, sf_dir, "embeddings")).select(
-        (F.col("vec_id") + _ANN_OFF).alias("vec_id"),
-        F.reverse(F.col("embedding").cast("array<double>")).alias("emb"),
-    )
-    n = df.count()
-    from pyspark.sql import Window
+    def parts():
+        df = spread(table(spark, sf_dir, "embeddings")).select(
+            (F.col("vec_id") + _ANN_OFF).alias("vec_id"),
+            F.reverse(F.col("embedding").cast("array<double>")).alias("emb"),
+        )
+        return _split(_ranked(df, n_chunks, "vec_id"), n_chunks)
 
-    w = Window.orderBy("vec_id")
-    ranked = df.withColumn(
-        "chunk", ((F.row_number().over(w) - 1) * n_chunks / n).cast("long")
-    )
-    for i in range(n_chunks):
-        part = ranked.filter(F.col("chunk") == i).drop("chunk")
-        tmpout = os.path.join(build_root, "tmpout")
-        part.coalesce(1).write.mode("overwrite").parquet(tmpout)
-        src = glob.glob(os.path.join(tmpout, "part-*.parquet"))[0]
-        dst = os.path.join(build_in, f"chunk{i:03d}.parquet")
-        shutil.move(src, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    shutil.rmtree(os.path.join(build_root, "tmpout"), ignore_errors=True)
-    with open(os.path.join(build_root, "_done"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(build_root, root)
-    except OSError:
-        if os.path.exists(marker):
-            shutil.rmtree(build_root, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(build_root, root)
-    return in_dir
+    return _stage_chunks(sf_dir, f"vecingest_c{n_chunks}", ("embeddings",), parts)
 
 
 def vector_file_stream(

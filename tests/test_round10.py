@@ -32,7 +32,7 @@ def _ivf_fixture(spark):
 
 
 def _staged_dir(sf_dir: str, gen: str) -> str:
-    from nfl_predictions_spark.operators.extended import _staged_path
+    from nfl_predictions_spark.state import staged_path as _staged_path
 
     return os.path.join(
         _staged_path(sf_dir, "ivf_assign", sources=("embeddings",)),
@@ -48,7 +48,7 @@ def test_raced_staged_artifact_self_heals(spark):
     answers until a manual /tmp wipe; now the in-band ``cgen`` stamp
     disagrees with the served generation at read time and the store
     rebuilds itself."""
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage as _atomic_stage
     from nfl_predictions_spark.operators.similarity import (
         _ivf_assign,
         q337_ivf_absorb,
@@ -94,7 +94,7 @@ def test_legacy_unstamped_artifact_self_heals(spark):
     column) is untrusted by construction: it predates the stamping
     protocol, so its generation provenance is unverifiable. It must be
     rebuilt, not served."""
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage as _atomic_stage
     from nfl_predictions_spark.operators.similarity import (
         _ivf_assign,
         _staged_base_assign,

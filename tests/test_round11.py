@@ -215,8 +215,8 @@ def test_q345_compacted_artifact_self_validates(spark):
     import os
     import shutil
 
-    from nfl_predictions_spark.operators.extended import _staged_path
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import staged_path as _staged_path
+    from nfl_predictions_spark.state import atomic_stage as _atomic_stage
     from nfl_predictions_spark.operators.similarity import (
         _EVICT_VEC_MOD,
         q345_ivf_compact,
@@ -273,7 +273,7 @@ def test_q346_cascade_consistent_with_evictions(spark):
     assert shingle.purged > docs.purged  # index fan-out
     assert docs.purged > 0 and emb.purged > 0
     # the compacted store (q345) holds exactly the remaining assignments
-    from nfl_predictions_spark.operators.extended import _staged_path
+    from nfl_predictions_spark.state import staged_path as _staged_path
     from nfl_predictions_spark.operators.similarity import (
         _EVICT_VEC_MOD,
     )

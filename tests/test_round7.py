@@ -125,7 +125,7 @@ def test_staged_gc_keeps_fresh_generations(tmp_path, monkeypatch):
     it); one older than the window is reaped."""
     import tempfile
 
-    from nfl_predictions_spark.operators import extended
+    from nfl_predictions_spark import state
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     root = tmp_path / "nfl_predictions_spark"
@@ -139,7 +139,7 @@ def test_staged_gc_keeps_fresh_generations(tmp_path, monkeypatch):
     os.utime(stale, (old, old))
     os.utime(other, (old, old))
 
-    out = extended._staged_path(str(tmp_path / "sfX"), "blobs")
+    out = state.staged_path(str(tmp_path / "sfX"), "blobs")
     assert fresh.exists(), "fresh superseded generation must survive GC"
     assert not stale.exists(), "quiet superseded generation must be reaped"
     assert other.exists(), "other kinds are never this call's business"

@@ -81,7 +81,7 @@ def test_atomic_stage_heals_husk_directory(spark, tmp_path):
     existing WITHOUT _SUCCESS; every later rename then fails ENOTEMPTY
     and callers would read the partial parquet forever. _atomic_stage
     must detect the husk, remove it, and install the fresh build."""
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage as _atomic_stage
 
     out = str(tmp_path / "staged")
     os.makedirs(out)
@@ -97,7 +97,7 @@ def test_atomic_stage_heals_husk_directory(spark, tmp_path):
 def test_atomic_stage_never_clobbers_complete_winner(spark, tmp_path):
     """The self-heal must NOT touch a complete (_SUCCESS-marked) winner:
     losing the race still means reuse, not replace."""
-    from nfl_predictions_spark.operators.graph import _atomic_stage
+    from nfl_predictions_spark.state import atomic_stage as _atomic_stage
 
     out = str(tmp_path / "staged")
     spark.createDataFrame([(42,)], "a int").write.parquet(out)
@@ -109,7 +109,7 @@ def test_atomic_stage_never_clobbers_complete_winner(spark, tmp_path):
 
 def test_ml_staging_uses_shared_atomic_stage():
     """The ml-side staging installers must route through the ONE shared
-    self-heal implementation (graph._atomic_stage), not a private copy —
+    self-heal implementation (state.atomic_stage), not a private copy —
     concurrency logic duplicated per module drifts."""
     import inspect
 
@@ -117,7 +117,7 @@ def test_ml_staging_uses_shared_atomic_stage():
 
     assert not hasattr(mlq, "_install_staged")
     for fn in (mlq.dump_tree_nodes, mlq._dump_scoring_frames):
-        assert "_atomic_stage" in inspect.getsource(fn)
+        assert "atomic_stage" in inspect.getsource(fn)
     assert "os.rename" not in inspect.getsource(mlq)
 
 
@@ -126,7 +126,7 @@ def test_staged_path_touches_on_handout(tmp_path):
     grace window must be keyed on last HAND-OUT — _staged_path touches
     the generation it returns, so a session that keeps asking for it can
     never have it reaped mid-query."""
-    from nfl_predictions_spark.operators.extended import _staged_path
+    from nfl_predictions_spark.state import staged_path as _staged_path
 
     out = _staged_path(SF_SMOKE, "touch_probe_r8")
     os.makedirs(out, exist_ok=True)
@@ -158,8 +158,9 @@ def test_fitted_centroids_rebuild_keeps_old_generation_readable(tmp_path, monkey
     assert 'os.path.join(out, "_SUCCESS")' in src  # adopt-if-complete
     fit = inspect.getsource(similarity._fit_centroid_dir)
     assert "rmtree(out" not in fit
-    # install is rename-only; losing the race adopts the winner
-    assert "os.rename(tgt, out)" in fit
+    # install is rename-only (state.atomic_stage); losing the race
+    # adopts the winner
+    assert "atomic_stage(" in fit
 
 
 def test_window_group_limit_plans_pinned(spark):

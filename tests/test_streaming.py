@@ -335,10 +335,11 @@ def test_analyze_table_feeds_cbo_stats(spark):
     """ANALYZE TABLE persists row-count/size statistics the cost-based
     optimizer reads; the catalog table from q81 must report them."""
     from nfl_predictions_spark.operators.maintenance import q81_catalog_table
+    from nfl_predictions_spark.state import fingerprint
     from tests.conftest import SF_SMOKE
 
     q81_catalog_table(spark, SF_SMOKE).collect()
-    name = "nflspark_orders_sf0_001"
+    name = f"nflspark_orders_sf0_001_{fingerprint(SF_SMOKE, ('orders',))}"
     spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
     row = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").filter(
         "col_name = 'Statistics'"

@@ -15,7 +15,6 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import tempfile
 import time
 
 
@@ -23,15 +22,15 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    # cold-start: drop the engine's staged/stream/model caches
-    staging = os.path.join(tempfile.gettempdir(), "nfl_predictions_spark")
-    if not only and os.path.isdir(staging):
-        shutil.rmtree(staging, ignore_errors=True)
-
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from nfl_predictions_spark import state
+
+    # cold-start: drop the engine's staged/stream/model caches
+    if not only:
+        shutil.rmtree(state.root(), ignore_errors=True)
 
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
