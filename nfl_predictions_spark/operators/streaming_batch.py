@@ -396,7 +396,6 @@ def q83_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .queryName(name)
             .outputMode("append")
             .trigger(processingTime="0 seconds")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="nflspark_synck_"))
             .start()
         )
         deadline = time.time() + 120
@@ -438,8 +437,8 @@ def q84_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reader resolves state partitions through the session's
     StateStoreCoordinator, which only exists after a streaming query has
     run in THIS session — so the query always executes its own stream
-    (fresh checkpoint each call) rather than caching across sessions."""
-    import tempfile
+    (fresh checkpoint each call) rather than caching across sessions. The
+    state is read out eagerly, so the checkpoint is removed on return."""
     import uuid
 
     stream = events_file_stream(spark, sf_dir, with_dups=False)
@@ -458,17 +457,19 @@ def q84_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         assert q.awaitTermination(300), "q84 stream did not finish within 300 s"
+        in_state = (
+            spark.read.format("statestore")
+            .load(ck)
+            .select(
+                F.col("key.window.start").cast("timestamp_ntz").alias("ws"),
+                F.col("value.count").alias("cnt"),
+            )
+            .localCheckpoint()
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-    return (
-        spark.read.format("statestore")
-        .load(ck)
-        .select(
-            F.col("key.window.start").cast("timestamp_ntz").alias("ws"),
-            F.col("value.count").alias("cnt"),
-        )
-        .orderBy("ws")
-    )
+        shutil.rmtree(ck, ignore_errors=True)
+    return in_state.orderBy("ws")
 
 
 @_q(
@@ -548,7 +549,6 @@ def q96_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stream.writeStream.foreachBatch(upsert)
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="nflspark_mvck_"))
             .start()
         )
         finished = q.awaitTermination(300)
@@ -694,7 +694,6 @@ def q112_streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stream.writeStream.foreachBatch(ingest)
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="nflspark_corpusck_"))
             .start()
         )
         assert q.awaitTermination(300), "q112 stream did not finish within 300 s"
@@ -982,10 +981,6 @@ def q332_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stream.writeStream.foreachBatch(handle)
             .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="nflspark_neardupck_"),
-            )
             .start()
         )
         assert q.awaitTermination(300), "q332 stream did not finish in 300 s"
@@ -1119,7 +1114,7 @@ def q335_stream_absorb_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-generation rebuild. Verdicts land in per-epoch overwrite
     partitions (idempotent under micro-batch retry, the q332
     contract). The in-memory carried state is scoped to one replay
-    (fresh checkpoint dir, failures surface via awaitTermination); a
+    (temporary checkpoint, failures surface via awaitTermination); a
     long-lived deployment would persist each delta keyed by epoch —
     exactly the staged-component shape q333 demonstrates — and
     reload on restart."""
@@ -1138,10 +1133,6 @@ def q335_stream_absorb_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             stream.writeStream.foreachBatch(handle)
             .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="nflspark_absorbck_"),
-            )
             .start()
         )
         assert q.awaitTermination(300), "q335 stream did not finish in 300 s"
@@ -1238,10 +1229,6 @@ def q341_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(handle)
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="nflspark_vecingestck_"),
-        )
         .start()
     )
     assert q.awaitTermination(300), "q341 stream did not finish in 300 s"

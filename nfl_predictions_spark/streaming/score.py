@@ -19,10 +19,15 @@ callback.
 Each query keeps its checkpoint under ``out_root/_checkpoints/<route>``,
 and the file sink records committed batches in its ``_spark_metadata``
 log, so a rerun with the same ``out_root`` resumes where the last one
-stopped and neither sink gains duplicates. That exactly-once guarantee
-holds for readers that go through Spark (``spark.read.parquet``), which
-honours the metadata log; a reader listing the directory itself may
-also see files of a batch that failed before its commit.
+stopped and neither sink gains duplicates. Every entry of those logs
+(offsets, commits, ``_spark_metadata``) is written to a temporary file
+and renamed into place by the session's checkpoint manager,
+``FileSystemBasedCheckpointFileManager`` (``session.get_spark``); the
+guarantee rests on that rename being atomic, which a local POSIX rename
+and HDFS ``FileSystem.rename`` both are. It holds for readers that go
+through Spark (``spark.read.parquet``), which honours the metadata log;
+a reader listing the directory itself may also see files of a batch
+that failed before its commit.
 """
 
 from __future__ import annotations

@@ -20,7 +20,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -135,10 +134,6 @@ def stream_partitions() -> str:
     store writes one delta file per partition per micro-batch, so this
     is a direct file-op multiplier."""
     return os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-
-
-def checkpoint_dir() -> str:
-    return tempfile.mkdtemp(prefix="nflspark_ck_")
 
 
 def stage_document_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:

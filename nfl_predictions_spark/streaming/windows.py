@@ -19,7 +19,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nfl_predictions_spark.streaming.sources import checkpoint_dir, stream_partitions
+from nfl_predictions_spark.streaming.sources import stream_partitions
 
 _counter = itertools.count()
 
@@ -85,6 +85,8 @@ def run_to_batch(
 ) -> DataFrame:
     """Execute a streaming transformation to completion (AvailableNow)
     into a memory sink; return the sink contents as a batch DataFrame.
+    The query runs on Spark's temporary checkpoint, which the session
+    deletes when the query stops.
 
     Shuffle-partition note: a streaming query bakes the shuffle count
     into its state layout at start. Under a default 200-partition
@@ -108,7 +110,6 @@ def run_to_batch(
             .queryName(name)
             .outputMode(mode)
             .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir())
             .start()
         )
         q.awaitTermination(300)

@@ -230,6 +230,22 @@ def test_score_route_sink_schemas(routed):
     assert fields(dlq) == fields(requests) + [("reason", "string")]
 
 
+def test_score_route_writes_no_checksum_sidecars(spark, routed):
+    """The session writes local files through the raw local FS and renames
+    the streaming logs through the FileSystem API: no ``.crc`` file lands
+    in either sink, its ``_spark_metadata`` log or the checkpoints."""
+    _, scored, _ = routed
+    out_root = os.path.dirname(os.path.dirname(scored.inputFiles()[0].removeprefix("file://")))
+    names = {os.path.relpath(os.path.join(d, f), out_root)
+             for d, _, files in os.walk(out_root) for f in files}
+    for part in ("scored/_spark_metadata/0", "_checkpoints/scored/offsets/0",
+                 "_checkpoints/dead_letter/commits/0"):
+        assert part in names
+    assert [n for n in names if n.endswith(".crc")] == []
+    manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert manager.endswith(".FileSystemBasedCheckpointFileManager")
+
+
 def test_simulated_requests_deterministic(spark):
     from nfl_predictions_spark.streaming.simulate import simulated_requests
 
@@ -542,6 +558,30 @@ def test_dedup_ttl_guarantee_boundary(spark, tmp_path):
     copies = Counter(r.event_id for r in out)
     assert copies[1] == 2, copies  # expired key: retry re-emitted
     assert copies[2] == copies[4] == copies[5] == 1
+
+
+def test_one_shot_stream_queries_leave_no_checkpoint(spark, tmp_path, monkeypatch):
+    """Memory-sink and foreachBatch queries run once inside their call
+    leave no checkpoint dir behind under the temp root: run_to_batch and
+    q96 run on Spark's temporary checkpoint, and q84 removes the one its
+    state reader needs."""
+    import fnmatch
+
+    from nfl_predictions_spark.operators.streaming_batch import (
+        q84_state_reader,
+        q96_streaming_matview,
+    )
+    from nfl_predictions_spark.streaming.windows import run_to_batch, tumbling_counts
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    in_dir = _write_chunks(spark, [[_row(1, 2)], [_row(2, 3)]])
+    assert run_to_batch(spark, tumbling_counts(_stream(spark, in_dir)), "complete").count() == 2
+    assert q84_state_reader(spark, SF_SMOKE).count() > 0
+    assert q96_streaming_matview(spark, SF_SMOKE).count() > 0
+    left = [n for n in os.listdir(tmp_path)
+            if fnmatch.fnmatch(n, "nflspark_*ck*") or n.startswith("nflspark_stateq_")]
+    assert left == []
 
 
 def test_checkpoint_recovery_exactly_once(spark):
