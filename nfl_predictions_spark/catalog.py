@@ -25,15 +25,50 @@ New protocol, ``state.atomic_stage`` extended to catalog tables:
 
 Nothing in this path ever deletes a complete generation, so any number
 of concurrent sessions converge on one copy and all stay green.
+
+Superseded generations (an earlier fingerprint tag of the same fixture)
+go through ``drop_superseded``: those this session's catalog lists are
+dropped at once; the ones only on disk, left by earlier sessions, are
+reaped once quiet for ``state.GC_GRACE_S``, the ``staged_path`` rule.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nfl_predictions_spark.state import atomic_stage
+from nfl_predictions_spark.state import atomic_stage, reap_quiet, touch
+
+
+def db_dir(spark: SparkSession, db: str) -> str:
+    """The warehouse directory that holds ``db``'s managed tables."""
+    return os.path.join(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path, f"{db}.db")
+
+
+def drop_superseded(
+    spark: SparkSession, db: str, prefixes: tuple[str, ...], keep: set[str]
+) -> set[str]:
+    """Create ``db`` if missing and drop the copies of earlier tags:
+    every table whose name starts with one of ``prefixes`` and is not in
+    ``keep``. Returns the tables this session's catalog still lists."""
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    loc = db_dir(spark, db)
+
+    def superseded(name: str) -> bool:
+        return name.startswith(prefixes) and name not in keep
+
+    listed = {t[0] for t in spark.sql(f"SHOW TABLES IN {db}").select("tableName").collect()}
+    for name in sorted(filter(superseded, listed)):
+        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
+        shutil.rmtree(os.path.join(loc, name), ignore_errors=True)
+        listed.discard(name)
+    reap_quiet(loc, superseded)
+    for name in keep:
+        touch(os.path.join(loc, name))
+    return listed
 
 
 def _ddl(df: DataFrame) -> str:

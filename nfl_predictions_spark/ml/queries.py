@@ -14,6 +14,7 @@ gain aggregation from the same node parquet (round 5).
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import os
 
@@ -62,36 +63,47 @@ def trained_models(spark: SparkSession):
     local format (loading them launches no Spark job), under a cache key
     that names the training size, the pyspark version and the format,
     and are loaded once per session — the reference loads models once
-    at boot (assets/app_nfl.py:337-338), never per query. A cache that
-    fails to load is logged and retrained."""
+    at boot (assets/app_nfl.py:337-338), never per query.
+
+    The cache is one ``state.atomic_stage`` entry: saved in a private
+    directory, marked ``_SUCCESS`` and renamed into place, so two cold
+    processes never interleave their writes and only a complete cache is
+    loaded. Everything derived from the models (``_gbt_dirs``, the q87
+    and q37d dumps) lives inside that entry, so a rebuilt cache replaces
+    them too. A complete cache that fails to load is logged, demoted and
+    rebuilt."""
     memo_key = (_CACHE_ROOT, spark.sparkContext.applicationId)
     cached = _LOADED_MODELS.get(memo_key)
     if cached is not None:
         return cached
-    marker = os.path.join(_CACHE_ROOT, "_done")
-    if os.path.exists(marker):
+    done = os.path.join(_CACHE_ROOT, "_SUCCESS")
+    if os.path.exists(done):
         try:
             models = load_models(_CACHE_ROOT)
             _LOADED_MODELS[memo_key] = models
             return models
         except Exception:
             log.warning("model cache %s failed to load; retraining", _CACHE_ROOT, exc_info=True)
+            with contextlib.suppress(OSError):
+                os.remove(done)
     plays = build_features(synthetic_plays(spark, _TRAIN_GAMES, _TRAIN_PLAYS)).persist()
-    # The 40 GBT fit iterations each run small jobs; a 200-partition
-    # shuffle default (the driver session's) adds pure overhead at this
-    # training size. Pin a small count for the fits, then restore.
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         pass_model, run_model = train_models(plays)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
         plays.unpersist()
-    save_models(pass_model, run_model, _CACHE_ROOT)
-    with open(marker, "w") as f:
-        f.write("ok")
+    state.atomic_stage(_saver(lambda tmp: save_models(pass_model, run_model, tmp)), _CACHE_ROOT)
     _LOADED_MODELS[memo_key] = (pass_model, run_model)
     return pass_model, run_model
+
+
+def _saver(save):
+    """An ``atomic_stage`` writer: ``save(tmp)``, then mark it complete."""
+
+    def write(tmp: str) -> None:
+        save(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return write
 
 
 #: lazy request-batch PLAN memo: (appId, n) -> DataFrame. The batch is
@@ -268,14 +280,13 @@ def _gbt_dirs(spark: SparkSession) -> dict[str, str]:
     ``data`` (tree nodes) and ``treesMetadata`` parquet tables the
     reference ships (the "fitted model as persisted dataset", PAPER.md
     §1) — written once per model-cache generation by a plain
-    ``write().save()`` under ``_CACHE_ROOT``. The model cache itself
-    holds the local format, which is not parquet."""
+    ``write().save()`` inside the model-cache entry, installed by
+    ``state.atomic_stage``. The model cache itself holds the local
+    format, which is not parquet."""
     out = {}
     for name, pipeline in zip(("pass", "run"), trained_models(spark)):
         path = os.path.join(_CACHE_ROOT, f"gbt_{name}")
-        # treesMetadata is the stage writer's last table
-        if not os.path.exists(os.path.join(path, "treesMetadata", "_SUCCESS")):
-            pipeline.stages[-1].write().overwrite().save(path)
+        state.atomic_stage(_saver(pipeline.stages[-1].write().save), path)
         out[name] = path
     return out
 

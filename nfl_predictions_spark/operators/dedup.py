@@ -2755,29 +2755,19 @@ def q334_multigen_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    # chunk-sized work: 32 shuffle partitions would schedule ~30 empty
-    # tasks per exchange across the loop's many small shuffles (the
-    # q332 tuning, applied to the whole absorb loop — the eager delta
-    # checkpoints execute the per-generation pipelines inside this
-    # scope, so the tuned width covers the real work)
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        state = AbsorbState(idx, dfreq)
-        verdicts = []
-        for g in range(_INC_CHUNKS):
-            ch = chunks.filter(F.col("chunk") == g).select("batch_id", "text")
-            verdicts.append(
-                state.absorb(ch).select(
-                    F.lit(g).cast("int").alias("gen"),
-                    "batch_id",
-                    "action",
-                    "match_id",
-                    "jac",
-                )
+    state = AbsorbState(idx, dfreq)
+    verdicts = []
+    for g in range(_INC_CHUNKS):
+        ch = chunks.filter(F.col("chunk") == g).select("batch_id", "text")
+        verdicts.append(
+            state.absorb(ch).select(
+                F.lit(g).cast("int").alias("gen"),
+                "batch_id",
+                "action",
+                "match_id",
+                "jac",
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+        )
     out = verdicts[0]
     for v in verdicts[1:]:
         out = out.unionByName(v)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nfl_predictions_spark import state
+from nfl_predictions_spark.session import scoped_conf
 from nfl_predictions_spark.sources.tables import register_views, table
 
 QUERIES: dict = {}
@@ -1926,28 +1927,17 @@ def _cbo_tables(spark: SparkSession, sf_dir: str) -> str:
     source fingerprint — the q52/q164 staged-store discipline, stale
     tags GC'd) so the cost-based optimizer has rowCount + column NDV/
     min/max statistics to reorder joins with."""
-    import shutil
-    from urllib.parse import urlparse
+    from nfl_predictions_spark.catalog import db_dir, drop_superseded, ensure_catalog_table
 
     srcs = ("customer", "orders", "nation")
     sf_base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tag = f"{sf_base}_{state.fingerprint(sf_dir, srcs)}"
-    spark.sql("CREATE DATABASE IF NOT EXISTS cbostats")
-    done = {
-        t[0]
-        for t in spark.sql("SHOW TABLES IN cbostats").select("tableName").collect()
-    }
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for old in sorted(done):
-        for src in srcs:
-            if old.startswith(f"{src}_{sf_base}_") and old != f"{src}_{tag}":
-                spark.sql(f"DROP TABLE IF EXISTS cbostats.{old}")
-                shutil.rmtree(
-                    os.path.join(warehouse, "cbostats.db", old), ignore_errors=True
-                )
-                done.discard(old)
-    from nfl_predictions_spark.catalog import ensure_catalog_table
-
+    done = drop_superseded(
+        spark,
+        "cbostats",
+        tuple(f"{src}_{sf_base}_" for src in srcs),
+        {f"{src}_{tag}" for src in srcs},
+    )
     for src in srcs:
         tbl = f"{src}_{tag}"
         if tbl not in done:
@@ -1957,7 +1947,7 @@ def _cbo_tables(spark: SparkSession, sf_dir: str) -> str:
             ensure_catalog_table(
                 spark,
                 f"cbostats.{tbl}",
-                os.path.join(warehouse, "cbostats.db", tbl),
+                os.path.join(db_dir(spark, "cbostats"), tbl),
                 lambda src=src: table(spark, sf_dir, src),
             )
             spark.sql(
@@ -1993,10 +1983,10 @@ def q278_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Conf posture is scoped exactly like q272's runtime-filter demo:
     CBO flags set after staging, the reordered physical plan primed
     into this Dataset's cached QueryExecution (self-asserted: the
-    orders scan must NOT be the first leaf), every conf restored in a
-    finally. The oracle runs the plain declared-order SQL — same
-    result by join commutativity, which is the point: reordering is
-    pure execution strategy."""
+    orders scan must NOT be the first leaf), every conf restored by
+    ``session.scoped_conf``. The oracle runs the plain declared-order
+    SQL — same result by join commutativity, which is the point:
+    reordering is pure execution strategy."""
     tag = _cbo_tables(spark, sf_dir)
     sql = f"""
       SELECT n_name, CAST(count(*) AS BIGINT) AS cnt,
@@ -2008,14 +1998,7 @@ def q278_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE n_name IN ('NATION_3', 'NATION_7')
       GROUP BY n_name ORDER BY n_name
     """
-    old: dict[str, str | None] = {}
-    for k, v in _CBO_CONFS.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _CBO_CONFS):
         df = spark.sql(sql)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         first = plan.find(f"orders_{tag}")
@@ -2023,12 +2006,6 @@ def q278_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"nation_{tag}"
         ), "CBO did not reorder — statistics posture regressed"
         df._jdf.queryExecution().executedPlan()  # bake the reordered plan
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return df
 
 
@@ -2071,7 +2048,7 @@ def q279_aqe_runtime_replan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FINAL adaptive plan (isFinalPlan=true) contains the broadcast
     join the static plan lacked, then returns a fresh lazy frame of the
     same query (value-identical under any strategy — the oracle is the
-    plain join). Confs are restored in a finally, q272-style."""
+    plain join). Confs are scoped by ``session.scoped_conf``, q272-style."""
 
     def build() -> DataFrame:
         li = table(spark, sf_dir, "lineitem")
@@ -2091,15 +2068,7 @@ def q279_aqe_runtime_replan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("l_returnflag")
         )
 
-    build()  # ensure tune_for_input ran before scoping confs
-    old: dict[str, str | None] = {}
-    for k, v in _AQE_CONFS.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _AQE_CONFS):
         probe = build()
         static = probe._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in static, "static plan should sort-merge"
@@ -2114,12 +2083,6 @@ def q279_aqe_runtime_replan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         df = build()
         df._jdf.queryExecution().executedPlan()  # bake SMJ->AQE plan
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return df
 
 

@@ -86,9 +86,8 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet's size+mtime, stale copies of the same fixture are dropped
     before a rebuild."""
     import os
-    import shutil
-    from urllib.parse import urlparse
 
+    from nfl_predictions_spark.catalog import db_dir, drop_superseded, ensure_catalog_table
     from nfl_predictions_spark.sources.tables import table
     from nfl_predictions_spark.state import fingerprint
 
@@ -106,16 +105,8 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         + f"_b{n_buckets}_{fingerprint(sf_dir, ('lineitem',))}"
     )
     tbl = f"edges_{tag}"
-    spark.sql("CREATE DATABASE IF NOT EXISTS buckets")
-    done = {
-        t[0] for t in spark.sql("SHOW TABLES IN buckets").select("tableName").collect()
-    }
     sf_base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for old in sorted(done):
-        if old.startswith(f"edges_{sf_base}_b") and old != tbl:
-            spark.sql(f"DROP TABLE IF EXISTS buckets.{old}")
-            shutil.rmtree(os.path.join(warehouse, "buckets.db", old), ignore_errors=True)
+    drop_superseded(spark, "buckets", (f"edges_{sf_base}_b",), {tbl})
 
     def _build_edges() -> DataFrame:
         li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -130,14 +121,12 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             e0.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
 
-    from nfl_predictions_spark.catalog import ensure_catalog_table
-
     # adopt-or-build (VERDICT r09 #6): never wipe a complete copy a
     # concurrent session may be scanning
     ensure_catalog_table(
         spark,
         f"buckets.{tbl}",
-        os.path.join(warehouse, "buckets.db", tbl),
+        os.path.join(db_dir(spark, "buckets"), tbl),
         _build_edges,
         bucket=(n_buckets, "b", None),
     )

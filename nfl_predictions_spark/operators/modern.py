@@ -603,26 +603,20 @@ def q104_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration scales like any other query (it's the ITERATION COUNT that
     must stay small — same rule as q95's PageRank rounds)."""
     register_views(spark, sf_dir, ["orders"])
-    old = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql(
-            """
-            BEGIN
-              DECLARE i INT DEFAULT 0;
-              DECLARE acc BIGINT DEFAULT 0;
-              WHILE i < 5 DO
-                SET acc = acc +
-                  (SELECT count(*) FROM orders WHERE o_orderkey % 5 = i);
-                SET i = i + 1;
-              END WHILE;
-              SELECT acc AS total_orders, i AS n_rounds;
-            END
-            """
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.scripting.enabled", old)
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE i INT DEFAULT 0;
+          DECLARE acc BIGINT DEFAULT 0;
+          WHILE i < 5 DO
+            SET acc = acc +
+              (SELECT count(*) FROM orders WHERE o_orderkey % 5 = i);
+            SET i = i + 1;
+          END WHILE;
+          SELECT acc AS total_orders, i AS n_rounds;
+        END
+        """
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nfl_predictions_spark.functions.scalars import dsum
+from nfl_predictions_spark.session import scoped_conf
 from nfl_predictions_spark.sources.tables import spread, table
 
 QUERIES: dict = {}
@@ -162,8 +163,6 @@ def write_bucketed_tables(
         os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
         + f"_b{n_buckets}_{fingerprint(sf_dir, ('orders', 'lineitem'))}"
     )
-    spark.sql("CREATE DATABASE IF NOT EXISTS buckets")
-    done = {t[0] for t in spark.sql("SHOW TABLES IN buckets").select("tableName").collect()}
     specs = {
         f"orders_{tag}": ("orders", "o_orderkey"),
         f"lineitem_{tag}": ("lineitem", "l_orderkey"),
@@ -172,21 +171,12 @@ def write_bucketed_tables(
     # regeneration mints a new fingerprint tag; without cleanup the old
     # bucketed copies accumulate unboundedly in the warehouse). Same
     # sf-prefix + different tag == superseded.
-    import shutil
-    from urllib.parse import urlparse
+    from nfl_predictions_spark.catalog import db_dir, drop_superseded, ensure_catalog_table
 
     sf_base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for old in sorted(done):
-        for src in ("orders", "lineitem"):
-            if old.startswith(f"{src}_{sf_base}_b") and old not in specs:
-                spark.sql(f"DROP TABLE IF EXISTS buckets.{old}")
-                shutil.rmtree(
-                    os.path.join(warehouse, "buckets.db", old), ignore_errors=True
-                )
-                done.discard(old)
-    from nfl_predictions_spark.catalog import ensure_catalog_table
-
+    drop_superseded(
+        spark, "buckets", (f"orders_{sf_base}_b", f"lineitem_{sf_base}_b"), set(specs)
+    )
     for tbl, (src, key) in specs.items():
         # adopt-or-build (VERDICT r09 #6): a complete on-disk copy left
         # by another session is REGISTERED, never wiped and rebuilt —
@@ -195,7 +185,7 @@ def write_bucketed_tables(
         ensure_catalog_table(
             spark,
             f"buckets.{tbl}",
-            os.path.join(warehouse, "buckets.db", tbl),
+            os.path.join(db_dir(spark, "buckets"), tbl),
             lambda src=src: table(spark, sf_dir, src),
             bucket=(n_buckets, key, key),
         )
@@ -784,7 +774,7 @@ def q238_bloom_file_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: probe), and only when the application-side scan is big enough to pay
 #: for the extra build — thresholds sized for clusters, not a local
 #: fixture, so the demo lowers them for the duration of ITS OWN
-#: planning/execution and restores them in a finally.
+#: planning/execution (``session.scoped_conf``).
 _RF_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
@@ -842,38 +832,24 @@ def q272_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan thresholds (a 10 GB application side by default), so this
     function scopes the documented conf posture (_RF_CONFS) around ITS
     OWN plan: it primes the Dataset's cached physical plan inside the
-    window and restores every conf in a finally — later queries in the
-    same session see untouched settings, and the driver's .collect() on
-    the returned handle executes the already-planned bloom-filtered
-    join. (A re-plan from a fresh writer path outside the window falls
+    window, and ``session.scoped_conf`` restores every conf — later
+    queries in the same session see untouched settings, and the caller's
+    .collect() on the returned handle executes the already-planned
+    bloom-filtered join. (A re-plan from a fresh writer path outside the window falls
     back to the plain shuffle join — value-identical by construction,
     which is also what the DuckDB oracle proves.)
 
     Plan shape pinned in tests: bloom_filter_agg on the creation side,
     might_contain on the probe side, under the scoped confs.
     """
-    df = _rf_join(spark, sf_dir)  # table() first: tune_for_input has run
-    old: dict[str, str | None] = {}
-    for k, v in _RF_CONFS.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
-        df = _rf_join(spark, sf_dir)  # re-plan under the scoped posture
+    with scoped_conf(spark, _RF_CONFS):
+        df = _rf_join(spark, sf_dir)
         # prime the lazy physical plan NOW so the injected runtime
         # filter is baked into this Dataset's cached QueryExecution
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan or "bloomfilter" in plan.lower(), (
             "runtime filter did not inject — conf posture regressed"
         )
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return df
 
 

@@ -18,7 +18,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nfl_predictions_spark.streaming.sources import events_file_stream, stream_partitions
+from nfl_predictions_spark.session import scoped_conf
+from nfl_predictions_spark.streaming.sources import events_file_stream
 from nfl_predictions_spark.streaming.windows import (
     run_to_batch,
     session_counts,
@@ -337,19 +338,11 @@ def q79_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     protobuf runtime is present (see ``_has_tws_runtime``)."""
     from nfl_predictions_spark.streaming.stateful import running_user_totals_tws
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, _ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER}):
         stream = events_file_stream(spark, sf_dir, with_dups=False)
         return run_to_batch(spark, running_user_totals_tws(stream), mode="update").orderBy(
             "user_id", "batch"
         )
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
 
 
 @_q(
@@ -388,23 +381,18 @@ def q83_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = f"nflspark_synstream_{uuid.uuid4().hex[:8]}"
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_partitions())
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline and spark.table(name).count() < n_rows:
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination(60)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    deadline = time.time() + 120
+    while time.time() < deadline and spark.table(name).count() < n_rows:
+        time.sleep(0.5)
+    q.stop()
+    q.awaitTermination(60)
     sunk = spark.table(name)
     assert sunk.count() == n_rows, "streaming source under-delivered"
     return (
@@ -445,8 +433,6 @@ def q84_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = watermarked_tumbling(stream)
     ck = tempfile.mkdtemp(prefix="nflspark_stateq_")
     name = f"nflspark_state_{uuid.uuid4().hex[:8]}"
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_partitions())
     try:
         q = (
             agg.writeStream.format("memory")
@@ -467,7 +453,6 @@ def q84_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
         shutil.rmtree(ck, ignore_errors=True)
     return in_state.orderBy("ws")
 
@@ -543,18 +528,13 @@ def q96_streaming_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(os.path.join(root, meta["dir"]), ignore_errors=True)
 
     stream = events_file_stream(spark, sf_dir, with_dups=False)
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_partitions())
-    try:
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        assert finished, "q96 stream did not finish within 300 s"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+    q = (
+        stream.writeStream.foreachBatch(upsert)
+        .trigger(availableNow=True)
+        .start()
+    )
+    finished = q.awaitTermination(300)
+    assert finished, "q96 stream did not finish within 300 s"
     meta = _read_pointer()
     assert meta["dir"] is not None, "q96 matview state never committed"
     return (
@@ -688,17 +668,12 @@ def q112_streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="nflspark_corpus_")
     ingest = corpus_ingest_fn(root)
     stream = documents_file_stream(spark, sf_dir)
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "q112 stream did not finish within 300 s"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+    q = (
+        stream.writeStream.foreachBatch(ingest)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300), "q112 stream did not finish within 300 s"
     meta = read_manifest(root)
     dirs = data_dirs(root, meta)
     assert dirs, "q112 ingested nothing"
@@ -975,17 +950,12 @@ def q332_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = recrawl_file_stream(
         spark, sf_dir, n_chunks=_INC_CHUNKS, files_per_trigger=4
     )
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "q332 stream did not finish in 300 s"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+    q = (
+        stream.writeStream.foreachBatch(handle)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300), "q332 stream did not finish in 300 s"
     # drop the discovered epoch partition column — it is sink plumbing
     # (idempotence key), not part of the verdict wire schema
     return (
@@ -1127,17 +1097,12 @@ def q335_stream_absorb_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = recrawl_file_stream(
         spark, sf_dir, n_chunks=_INC_CHUNKS, files_per_trigger=1
     )
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "q335 stream did not finish in 300 s"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+    q = (
+        stream.writeStream.foreachBatch(handle)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300), "q335 stream did not finish in 300 s"
     return (
         spark.read.parquet(out_dir)
         .select("gen", "batch_id", "action", "match_id", "jac")

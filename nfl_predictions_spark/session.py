@@ -6,6 +6,16 @@ pandas interchange for the pandas-UDF operators), UTC session timezone,
 and a shuffle-partition count that scales with the configured
 parallelism instead of the 200 default.
 
+``get_spark`` is the one writer of session conf. A session is shared by
+every query, stream and fit that runs in the process, so a query that
+re-tunes it changes the plans of whatever runs next, and a set-and-restore
+pair around one query races with any other thread using the session.
+Queries therefore read the conf, never write it. The one sanctioned
+exception is ``scoped_conf``: a handful of queries demonstrate a plan
+posture (CBO join reordering, AQE's runtime broadcast, runtime Bloom
+filters, the RocksDB state store) that needs a non-default flag while
+their own plan is built, and restore it before they return.
+
 On the test rig this runs ``local[$SPARK_GRAFT_CPUS]``; on a real
 cluster the same builder is used with whatever master the deployment
 provides — nothing here assumes local mode.
@@ -14,6 +24,8 @@ provides — nothing here assumes local mode.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -29,9 +41,14 @@ def get_spark(app_name: str = "nfl_predictions_spark", master: str | None = None
     - ``spark.sql.adaptive.enabled``: AQE re-plans joins, coalesces
       post-shuffle partitions and splits skewed ones at runtime — the
       main defense against skew at 1000-executor scale.
-    - ``spark.sql.shuffle.partitions`` is only the *initial* number;
-      AQE coalesces down. We size it to ~4x parallelism locally; a
-      cluster deployment should size it to ~2-3x total cores.
+    - ``spark.sql.shuffle.partitions`` is only the *initial* number:
+      2x the configured parallelism. AQE coalesces post-shuffle
+      partitions towards its advisory size
+      (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, 64 MB by
+      default), which is what scales the shuffle with the input. A
+      cluster sizes it through ``SPARK_GRAFT_CPUS`` (total cores).
+      Streams bake the count into their state layout at start; their
+      results do not depend on it.
     - Arrow execution makes the pandas-UDF operators (grouped-map
       normalization, embedding ops) batch-transfer instead of
       row-at-a-time pickling.
@@ -42,7 +59,7 @@ def get_spark(app_name: str = "nfl_predictions_spark", master: str | None = None
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 32)))
+        .config("spark.sql.shuffle.partitions", str(2 * cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -82,3 +99,21 @@ def get_spark(app_name: str = "nfl_predictions_spark", master: str | None = None
     else:  # pragma: no cover - cluster deployment path
         builder = builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body only. On exit, also when the body
+    raises, every key gets its earlier value back, and a key that was
+    not set before is unset again."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

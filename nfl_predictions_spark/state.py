@@ -61,28 +61,41 @@ def staged_path(sf_dir: str, kind: str, sources=("events",)) -> str:
     stem = path(f"{kind}_{base}")
     out = f"{stem}_{fingerprint(sf_dir, sources)}"
     parent, prefix = os.path.split(stem)
-    # Only reap generations quiet for GC_GRACE_S: a concurrent session
-    # (or a second sf_dir sharing the basename) may still be scanning a
-    # superseded one.
+    keep = os.path.basename(out)
+    reap_quiet(
+        parent,
+        lambda name: (name == prefix or name.startswith(prefix + "_")) and name != keep,
+    )
+    touch(out)
+    return out
+
+
+def reap_quiet(parent: str, superseded: Callable[[str], bool]) -> None:
+    """Remove each entry of ``parent`` whose name ``superseded`` picks,
+    once it has been quiet for ``GC_GRACE_S``: a concurrent session (or a
+    second fixture sharing the basename) may still be scanning it."""
     now = time.time()
     try:
-        for name in os.listdir(parent):
-            p = os.path.join(parent, name)
-            if (name == prefix or name.startswith(prefix + "_")) and p != out:
-                try:
-                    if now - os.stat(p).st_mtime > GC_GRACE_S:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
+        names = os.listdir(parent)
     except OSError:
-        pass
-    # Reads don't update a directory's mtime; touching the generation on
-    # every hand-out keys the grace window on last use, not last write.
+        return
+    for name in names:
+        p = os.path.join(parent, name)
+        try:
+            if superseded(name) and now - os.stat(p).st_mtime > GC_GRACE_S:
+                shutil.rmtree(p, ignore_errors=True)
+        except OSError:
+            pass
+
+
+def touch(p: str) -> None:
+    """Reads don't update a directory's mtime; touching a generation on
+    every hand-out keys ``reap_quiet``'s grace window on last use, not
+    last write."""
     try:
-        os.utime(out)
+        os.utime(p)
     except OSError:
         pass
-    return out
 
 
 def atomic_stage(build: DataFrame | Callable[[str], None], out: str) -> None:

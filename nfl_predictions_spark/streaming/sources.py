@@ -126,16 +126,6 @@ def events_file_stream(
     )
 
 
-def stream_partitions() -> str:
-    """Stream-scope shuffle/state partition count: sized to expected
-    STATE VOLUME (KB-scale in the replay fixtures), not cluster width.
-    A production deployment overrides via SPARK_GRAFT_STREAM_PARTITIONS
-    (state size / target per-partition state); the HDFS-backed state
-    store writes one delta file per partition per micro-batch, so this
-    is a direct file-op multiplier."""
-    return os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-
-
 def stage_document_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
     """Documents as n doc_id-ordered chunk files — the corpus-ingest
     stream: arrival order == doc_id order, so "first seen wins" dedup

@@ -19,8 +19,6 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nfl_predictions_spark.streaming.sources import stream_partitions
-
 _counter = itertools.count()
 
 
@@ -88,31 +86,16 @@ def run_to_batch(
     The query runs on Spark's temporary checkpoint, which the session
     deletes when the query stops.
 
-    Shuffle-partition note: a streaming query bakes the shuffle count
-    into its state layout at start. Under a default 200-partition
-    session every micro-batch schedules 200 state tasks for kilobytes
-    of state (measured 16-22 s/query at sf0.01); pinning a small count
-    for the stream's lifetime cuts that ~3x, and 8 measured another
-    ~0.4 s/query over 16 at sf0.1 (the HDFS-backed state store writes
-    one delta file per partition per micro-batch, so partition count is
-    a file-op multiplier). Results are partition-independent. The count
-    sizes to expected STATE VOLUME, not cluster width — the replay
-    fixtures carry KB-scale state; a production deployment sets
-    SPARK_GRAFT_STREAM_PARTITIONS to its state size / target
-    per-partition state.
+    The query runs at the session's shuffle-partition count, which it
+    bakes into its state layout at start; results do not depend on it.
     """
     name = f"nflspark_sink_{next(_counter)}"
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_partitions())
-    try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
+    q = (
+        streaming_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
     return spark.table(name)

@@ -10,7 +10,6 @@ same treatment through a failing UDF column in its input stream."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -56,14 +55,14 @@ def _rows(spark, out_dir: str, cols: list[str]):
     )
 
 
-def _dirs(prefix: str) -> tuple[str, str]:
-    return (
-        tempfile.mkdtemp(prefix=f"{prefix}_out_"),
-        tempfile.mkdtemp(prefix=f"{prefix}_ck_"),
-    )
+def _dirs(tmp_path, prefix: str) -> tuple[str, str]:
+    out, ck = tmp_path / f"{prefix}_out", tmp_path / f"{prefix}_ck"
+    out.mkdir()
+    ck.mkdir()
+    return str(out), str(ck)
 
 
-def test_q332_crash_restart(spark):
+def test_q332_crash_restart(spark, tmp_path):
     """q332 (stateless-given-base ingest): crash after 2 committed
     epochs, restart from the same checkpoint — the failed epoch
     re-fires with its original batch id, the remaining files drain,
@@ -76,7 +75,7 @@ def test_q332_crash_restart(spark):
     cols = ["chunk", "batch_id", "action", "match_id", "jac"]
 
     # uninterrupted baseline (own sink + checkpoint)
-    base_out, base_ck = _dirs("q332base")
+    base_out, base_ck = _dirs(tmp_path, "q332base")
     _run(
         spark,
         recrawl_file_stream(spark, SF_SMOKE, n_chunks=4, files_per_trigger=1),
@@ -86,7 +85,7 @@ def test_q332_crash_restart(spark):
     assert _epochs(base_out) == [0, 1, 2, 3]
 
     # crashed run: epochs 0-1 commit, epoch 2 dies before touching sink
-    out, ck = _dirs("q332crash")
+    out, ck = _dirs(tmp_path, "q332crash")
     _run(
         spark,
         recrawl_file_stream(spark, SF_SMOKE, n_chunks=4, files_per_trigger=1),
@@ -107,7 +106,7 @@ def test_q332_crash_restart(spark):
     assert _rows(spark, out, cols) == _rows(spark, base_out, cols)
 
 
-def test_q335_crash_restart_recovers_carried_state(spark):
+def test_q335_crash_restart_recovers_carried_state(spark, tmp_path):
     """q335 (SEQUENTIAL absorb — carried AbsorbState): crash after 2
     committed epochs; the restart rebuilds the carried state from the
     sink's committed partitions (recover_absorb_state) and resumes from
@@ -122,7 +121,7 @@ def test_q335_crash_restart_recovers_carried_state(spark):
 
     cols = ["gen", "batch_id", "action", "match_id", "jac"]
 
-    base_out, base_ck = _dirs("q335base")
+    base_out, base_ck = _dirs(tmp_path, "q335base")
     handle, _ = absorb_foreach_handler(spark, SF_SMOKE, base_out)
     _run(
         spark,
@@ -132,7 +131,7 @@ def test_q335_crash_restart_recovers_carried_state(spark):
     )
     assert _epochs(base_out) == [0, 1, 2, 3]
 
-    out, ck = _dirs("q335crash")
+    out, ck = _dirs(tmp_path, "q335crash")
     handle, _ = absorb_foreach_handler(spark, SF_SMOKE, out)
     _run(
         spark,
@@ -158,7 +157,7 @@ def test_q335_crash_restart_recovers_carried_state(spark):
     assert _rows(spark, out, cols) == _rows(spark, base_out, cols)
 
 
-def test_q341_crash_restart(spark):
+def test_q341_crash_restart(spark, tmp_path):
     """q341 (streamed IVF ingest, stateless given the frozen
     quantizer): crash mid-ingest, restart from the same checkpoint;
     the landed delta partitions equal the uninterrupted run's — the
@@ -180,7 +179,7 @@ def test_q341_crash_restart(spark):
     )
     cols = ["vec_id", "cell"]
 
-    base_out, base_ck = _dirs("q341base")
+    base_out, base_ck = _dirs(tmp_path, "q341base")
     _run(
         spark,
         vector_file_stream(spark, SF_SMOKE, n_chunks=4, files_per_trigger=1),
@@ -189,7 +188,7 @@ def test_q341_crash_restart(spark):
     )
     assert _epochs(base_out) == [0, 1, 2, 3]
 
-    out, ck = _dirs("q341crash")
+    out, ck = _dirs(tmp_path, "q341crash")
     _run(
         spark,
         vector_file_stream(spark, SF_SMOKE, n_chunks=4, files_per_trigger=1),

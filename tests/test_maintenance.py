@@ -160,3 +160,105 @@ def test_only_state_module_touches_the_cache_root():
                 if hit and (p, node.lineno) not in allowed:
                     found.append(f"{os.path.relpath(p, pkg)}:{node.lineno}")
     assert not found, found
+
+
+def test_only_session_module_writes_conf():
+    """One writer of session conf: no package module but session.py
+    calls ``.conf.set`` or ``.conf.unset``."""
+    import ast
+
+    import nfl_predictions_spark
+
+    pkg = os.path.dirname(nfl_predictions_spark.__file__)
+    found = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            if not f.endswith(".py") or p == os.path.join(pkg, "session.py"):
+                continue
+            with open(p) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in ("set", "unset")
+                    and isinstance(node.value, ast.Attribute)
+                    and node.value.attr == "conf"
+                ):
+                    found.append(f"{os.path.relpath(p, pkg)}:{node.lineno}")
+    assert not found, found
+
+
+def test_get_spark_sizes_shuffle_to_twice_the_parallelism(spark):
+    from nfl_predictions_spark.session import default_parallelism
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(2 * default_parallelism())
+
+
+def test_table_and_stream_leave_session_conf_unchanged(spark, tmp_path):
+    """A first ``table()`` call on an input dir and a ``run_to_batch``
+    stream read the session conf and write none of it, whatever the
+    session's shuffle width is."""
+    from nfl_predictions_spark.session import scoped_conf
+    from nfl_predictions_spark.sources.tables import table
+    from nfl_predictions_spark.streaming.sources import events_file_stream
+    from nfl_predictions_spark.streaming.windows import run_to_batch, tumbling_counts
+
+    # a dir no earlier call has seen, so any once-per-input work runs
+    os.symlink(os.path.join(SF_SMOKE, "orders.parquet"), tmp_path / "orders.parquet")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "3"}):
+        before = dict(spark.sql("SET").collect())
+        assert table(spark, str(tmp_path), "orders").count() > 0
+        stream = events_file_stream(spark, SF_SMOKE, with_dups=False)
+        assert run_to_batch(spark, tumbling_counts(stream), "complete").count() > 0
+        assert dict(spark.sql("SET").collect()) == before
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """``scoped_conf`` gives a key that was set its old value back and
+    unsets a key that was unset, on a normal exit and when the body
+    raises."""
+    import pytest
+
+    from nfl_predictions_spark.session import scoped_conf
+
+    was_set = "spark.sql.autoBroadcastJoinThreshold"
+    was_unset = "spark.sql.cbo.joinReorder.enabled"
+    old = spark.conf.get(was_set)
+    assert spark.conf.get(was_unset, None) is None
+    before = dict(spark.sql("SET").collect())
+    scoped = {was_set: "-1", was_unset: "true"}
+
+    with scoped_conf(spark, scoped):
+        assert spark.conf.get(was_set) == "-1"
+        assert spark.conf.get(was_unset) == "true"
+    assert spark.conf.get(was_set) == old
+    assert spark.conf.get(was_unset, None) is None
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(spark, scoped):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(was_set) == old
+    assert spark.conf.get(was_unset, None) is None
+    assert dict(spark.sql("SET").collect()) == before
+
+
+def test_superseded_catalog_copies_on_disk_are_reaped_once_quiet(spark, tmp_path, monkeypatch):
+    """Copies of earlier tags that only exist on disk (left by earlier
+    sessions) are removed once quiet for the grace period; a recently
+    used one, the current tag and other tables stay."""
+    import time
+
+    from nfl_predictions_spark import catalog, state
+
+    db = tmp_path / "buckets.db"
+    monkeypatch.setattr(catalog, "db_dir", lambda spark, name: str(tmp_path / f"{name}.db"))
+    old = time.time() - state.GC_GRACE_S - 60
+    for name in ("zz_edges_sf_b8_old", "zz_edges_sf_b8_fresh", "zz_edges_sf_b8_cur", "yy_other"):
+        (db / name).mkdir(parents=True)
+        if name != "zz_edges_sf_b8_fresh":
+            os.utime(db / name, (old, old))
+    catalog.drop_superseded(spark, "buckets", ("zz_edges_sf_b",), {"zz_edges_sf_b8_cur"})
+    assert sorted(os.listdir(db)) == ["yy_other", "zz_edges_sf_b8_cur", "zz_edges_sf_b8_fresh"]
+    # the current copy was touched: its grace window runs from this use
+    assert os.stat(db / "zz_edges_sf_b8_cur").st_mtime > old + 60

@@ -415,3 +415,33 @@ def test_local_format_flag_is_reset(spark, models, tmp_path):
     with pytest.raises(Exception):
         load_models(str(tmp_path))
     assert _local_format_flag(spark) is False
+
+
+def test_model_cache_without_success_marker_is_rebuilt(spark, models, tmp_path, monkeypatch):
+    """A model cache with no ``_SUCCESS`` (an interrupted writer's
+    leftover) is rebuilt through ``state.atomic_stage``, never loaded, and
+    the derived GBT copies inside it go with it."""
+    import shutil
+
+    from nfl_predictions_spark.ml import queries as mq
+
+    leftover = tmp_path / "models"
+    for name in ("nfl_model_pass", "nfl_model_run"):
+        shutil.copytree(os.path.join(mq._CACHE_ROOT, name), leftover / name)
+    (leftover / "gbt_pass").mkdir()
+    (leftover / "gbt_pass" / "stale").write_text("from an older generation")
+    monkeypatch.setattr(mq, "_CACHE_ROOT", str(leftover))
+    monkeypatch.setattr(mq, "_LOADED_MODELS", {})
+    loads = []
+    real_load = mq.load_models
+    monkeypatch.setattr(mq, "load_models", lambda root: loads.append(root) or real_load(root))
+
+    pass_model, _ = mq.trained_models(spark)
+    assert loads == []
+    assert (leftover / "_SUCCESS").exists()
+    assert not (leftover / "gbt_pass").exists()
+    assert pass_model.stages[0].labels == models[0].stages[0].labels
+
+    mq._LOADED_MODELS.clear()
+    mq.trained_models(spark)
+    assert loads == [str(leftover)]

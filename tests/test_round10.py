@@ -308,12 +308,11 @@ def test_q341_stream_equals_batch(spark):
     assert batch
 
 
-def test_q341_epoch_sink_retry_idempotent(spark):
+def test_q341_epoch_sink_retry_idempotent(spark, tmp_path):
     """A retried micro-batch must rewrite its epoch partition, not
     double-ingest: replaying the same chunk through the handler twice
     leaves exactly one delta per vector (the q332/q335 contract)."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -337,7 +336,8 @@ def test_q341_epoch_sink_retry_idempotent(spark):
         )
         .limit(50)
     )
-    out_dir = tempfile.mkdtemp(prefix="nflspark_vecingest_test_")
+    out_dir = str(tmp_path / "vecingest_out")
+    os.makedirs(out_dir)
     assigned: dict = {}
 
     def handle(df, bid):

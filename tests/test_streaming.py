@@ -20,10 +20,11 @@ from pyspark.sql import functions as F
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
 
-def _write_chunks(spark, chunks):
+def _write_chunks(spark, chunks, root):
     """Write each chunk (list of row tuples) as one parquet file with
-    increasing mtimes; returns the input dir for a file stream."""
-    root = tempfile.mkdtemp(prefix="nflspark_chunks_")
+    increasing mtimes under ``root``; returns the input dir for a file
+    stream."""
+    root = str(root)
     in_dir = os.path.join(root, "in")
     os.makedirs(in_dir)
     for i, rows in enumerate(chunks):
@@ -56,7 +57,7 @@ def _row(eid, minute, second=0, user=1, etype="click"):
     )
 
 
-def test_late_event_beyond_watermark_dropped(spark):
+def test_late_event_beyond_watermark_dropped(spark, tmp_path):
     """An event arriving in a later micro-batch with ts older than the
     watermark must not be counted (Q34 late-data policy)."""
     from nfl_predictions_spark.streaming.windows import run_to_batch, watermarked_tumbling
@@ -69,7 +70,7 @@ def test_late_event_beyond_watermark_dropped(spark):
         [_row(3, 20)],  # batch 1: window 02:00 evicted+emitted, wm -> 19:00
         [_row(4, 2), _row(5, 30)],  # batch 2: late event at 02:00 -> dropped
     ]
-    in_dir = _write_chunks(spark, chunks)
+    in_dir = _write_chunks(spark, chunks, tmp_path)
     out = run_to_batch(spark, watermarked_tumbling(_stream(spark, in_dir)), "append")
     rows = out.collect()
     counts = {r.ws.minute: r.cnt for r in rows}
@@ -77,7 +78,7 @@ def test_late_event_beyond_watermark_dropped(spark):
     assert len(rows) == len(counts)  # no double emission of an evicted window
 
 
-def test_on_time_event_within_watermark_kept(spark):
+def test_on_time_event_within_watermark_kept(spark, tmp_path):
     """A late-ish event still inside the watermark horizon is merged
     into its (not yet finalized) window."""
     from nfl_predictions_spark.streaming.windows import run_to_batch, watermarked_tumbling
@@ -86,13 +87,13 @@ def test_on_time_event_within_watermark_kept(spark):
         [_row(1, 2), _row(2, 2, 30)],
         [_row(3, 2, 45), _row(4, 10)],  # minute-2 is above wm (=01:xx) after batch 0
     ]
-    in_dir = _write_chunks(spark, chunks)
+    in_dir = _write_chunks(spark, chunks, tmp_path)
     out = run_to_batch(spark, watermarked_tumbling(_stream(spark, in_dir)), "append")
     counts = {r.ws.minute: r.cnt for r in out.collect()}
     assert counts.get(2) == 3
 
 
-def test_dedup_within_watermark(spark):
+def test_dedup_within_watermark(spark, tmp_path):
     """A duplicate event_id arriving in a later batch, still within the
     watermark horizon, is dropped by keyed state (Q35)."""
     from nfl_predictions_spark.streaming.windows import run_to_batch, stateful_dedup
@@ -101,13 +102,13 @@ def test_dedup_within_watermark(spark):
         [_row(1, 2), _row(2, 3)],
         [_row(1, 4), _row(3, 5)],  # id=1 again, within the 10 min horizon
     ]
-    in_dir = _write_chunks(spark, chunks)
+    in_dir = _write_chunks(spark, chunks, tmp_path)
     out = run_to_batch(spark, stateful_dedup(_stream(spark, in_dir)), "append")
     ids = sorted(r.event_id for r in out.collect())
     assert ids == [1, 2, 3]
 
 
-def test_session_window_merge_and_gap(spark):
+def test_session_window_merge_and_gap(spark, tmp_path):
     """Events <30 s apart merge into one session; >=30 s starts a new
     one (Q33)."""
     from nfl_predictions_spark.streaming.windows import run_to_batch, session_counts
@@ -116,7 +117,7 @@ def test_session_window_merge_and_gap(spark):
         [_row(1, 0, 0), _row(2, 0, 20), _row(3, 0, 55)],  # merge 1+2; 3 separate
         [_row(4, 30)],  # advances watermark so earlier sessions emit
     ]
-    in_dir = _write_chunks(spark, chunks)
+    in_dir = _write_chunks(spark, chunks, tmp_path)
     out = run_to_batch(spark, session_counts(_stream(spark, in_dir)), "append")
     sizes = sorted(r.cnt for r in out.collect())
     assert sizes == [1, 2]
@@ -254,13 +255,11 @@ def test_simulated_requests_deterministic(spark):
     assert a == b
 
 
-def test_rate_micro_batch_tick_source(spark):
+def test_rate_micro_batch_tick_source(spark, tmp_path):
     """Deterministic tick stream (SURVEY §2A#23: the reference's NiFi
     GenerateFlowFile cadence): rate-micro-batch emits a fixed number of
     rows per batch with deterministic timestamps, mapped to simulated
     play requests."""
-    import tempfile
-
     from nfl_predictions_spark.streaming.simulate import simulated_requests
 
     ticks = (
@@ -277,7 +276,7 @@ def test_rate_micro_batch_tick_source(spark):
         .queryName(name)
         .outputMode("append")
         .trigger(processingTime="0 seconds")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="nflspark_tick_"))
+        .option("checkpointLocation", str(tmp_path / "tick_ck"))
         .start()
     )
     try:
@@ -296,13 +295,11 @@ def test_rate_micro_batch_tick_source(spark):
     assert first3 == set(range(30))  # deterministic dense sequence
 
 
-def test_restart_from_checkpoint_is_exactly_once(spark):
+def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
     """Kill a streaming query after its first micro-batch, restart it
     from the SAME checkpoint, and the final deduped output must equal
     the full-run result — no missing and no duplicated rows. This is
     the recovery contract every production deployment relies on."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from nfl_predictions_spark.streaming.sources import events_file_stream
@@ -310,8 +307,10 @@ def test_restart_from_checkpoint_is_exactly_once(spark):
     from nfl_predictions_spark.sources.tables import table
     from tests.conftest import SF_SMOKE
 
-    ck = tempfile.mkdtemp(prefix="nflspark_restart_ck_")
-    out = tempfile.mkdtemp(prefix="nflspark_restart_out_")
+    ck = str(tmp_path / "restart_ck")
+    out = str(tmp_path / "restart_out")
+    os.makedirs(ck)
+    os.makedirs(out)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
@@ -575,21 +574,22 @@ def test_one_shot_stream_queries_leave_no_checkpoint(spark, tmp_path, monkeypatc
     from tests.conftest import SF_SMOKE
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    in_dir = _write_chunks(spark, [[_row(1, 2)], [_row(2, 3)]])
+    in_dir = _write_chunks(spark, [[_row(1, 2)], [_row(2, 3)]], tmp_path)
     assert run_to_batch(spark, tumbling_counts(_stream(spark, in_dir)), "complete").count() == 2
     assert q84_state_reader(spark, SF_SMOKE).count() > 0
     assert q96_streaming_matview(spark, SF_SMOKE).count() > 0
+    # mkdtemp appends 8 random characters: match the prefix only, so a q96
+    # output dir whose random part happens to hold "ck" is not a checkpoint
     left = [n for n in os.listdir(tmp_path)
-            if fnmatch.fnmatch(n, "nflspark_*ck*") or n.startswith("nflspark_stateq_")]
+            if fnmatch.fnmatch(n[:-8], "nflspark_*ck*") or n.startswith("nflspark_stateq_")]
     assert left == []
 
 
-def test_checkpoint_recovery_exactly_once(spark):
+def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Kill a streaming query mid-run and resume it from its checkpoint:
     the file sink must contain exactly the one-shot result — no lost
     windows, no duplicated windows (exactly-once across restart is THE
     operational guarantee checkpointing exists for)."""
-    import tempfile
     import time
 
     from nfl_predictions_spark.streaming.sources import events_file_stream
@@ -599,8 +599,10 @@ def test_checkpoint_recovery_exactly_once(spark):
     )
     from tests.conftest import SF_SMOKE
 
-    ck = tempfile.mkdtemp(prefix="nflspark_ck_recover_")
-    out = tempfile.mkdtemp(prefix="nflspark_out_recover_")
+    ck = str(tmp_path / "recover_ck")
+    out = str(tmp_path / "recover_out")
+    os.makedirs(ck)
+    os.makedirs(out)
 
     def start(available_now: bool):
         stream = watermarked_tumbling(
