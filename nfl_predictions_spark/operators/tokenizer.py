@@ -66,6 +66,12 @@ _ROUNDS = 5
 _TRAIN_VOCAB_CAP = 1_000_000
 
 
+#: ``_encode_sym``'s Java regex '.' in RE2 syntax, for the DuckDB oracles:
+#: RE2 '.' excludes only \n, so on a word holding U+0085, U+2028 or U+2029
+#: a plain '(.)' would split a symbol Spark keeps whole.
+_ORACLE_DOT = r"([^\n\r\x{85}\x{2028}\x{2029}])"
+
+
 def _bpe_cte_prefix(rounds: int = _ROUNDS) -> str:
     """Shared WITH-clause prefix: word freqs (top-_TRAIN_VOCAB_CAP, the
     declared training budget), initial symbol strings, and the unrolled
@@ -78,7 +84,7 @@ def _bpe_cte_prefix(rounds: int = _ROUNDS) -> str:
         WHERE w <> '' GROUP BY w
       ) ORDER BY f DESC, w LIMIT {_TRAIN_VOCAB_CAP}
     ), w0 AS (
-      SELECT ' ' || rtrim(regexp_replace(w, '(.)', '\1  ', 'g')) || ' ' AS s, f
+      SELECT ' ' || rtrim(regexp_replace(w, '{_ORACLE_DOT}', '\1  ', 'g')) || ' ' AS s, f
       FROM wf
     )"""
     for r in range(1, rounds + 1):
@@ -114,9 +120,9 @@ def _bpe_tokenize_oracle(rounds: int = _ROUNDS) -> str:
     """Per-document token counts after applying the learned merges: the
     same b{r} rules cross-joined in as scalar replace arguments."""
     sql = _bpe_cte_prefix(rounds)
-    sql += r""", d0 AS (
+    sql += rf""", d0 AS (
       SELECT doc_id,
-             ' ' || rtrim(regexp_replace(w, '(.)', '\1  ', 'g')) || ' ' AS s
+             ' ' || rtrim(regexp_replace(w, '{_ORACLE_DOT}', '\1  ', 'g')) || ' ' AS s
       FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
             FROM documents)
       WHERE w <> ''
@@ -455,9 +461,9 @@ def _bpe_compression_oracle(rounds: int = _ROUNDS) -> str:
     """Per-source compression of the learned BPE: chars and BPE tokens
     aggregated over each source's corpus slice."""
     sql = _bpe_cte_prefix(rounds)
-    sql += r""", d0 AS (
+    sql += rf""", d0 AS (
       SELECT doc_id,
-             ' ' || rtrim(regexp_replace(w, '(.)', '\1  ', 'g')) || ' ' AS s,
+             ' ' || rtrim(regexp_replace(w, '{_ORACLE_DOT}', '\1  ', 'g')) || ' ' AS s,
              len(w) AS n_chars
       FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
             FROM documents)

@@ -91,6 +91,15 @@ def get_spark(app_name: str = "nfl_predictions_spark", master: str | None = None
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # Compiled whole-stage codegen classes live in one LRU cache per JVM,
+        # built when the SparkContext starts, so only a context this factory
+        # creates gets this size. Spark's default of 100 entries is below
+        # the perfbench analytics mix's working set (12 queries, 166-177
+        # classes), so the LRU evicted each class before its next use and
+        # every repeated pass recompiled ~160 of them with Janino. 1000
+        # holds ~6x that set, and metaspace after three passes is no larger
+        # than with 100 (recompiled classes are loaded anew each time).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master is not None:
         builder = builder.master(master)

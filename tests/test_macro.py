@@ -155,20 +155,30 @@ def test_bpe_trainer_symbols_match_spark_encoding(spark, tmp_path):
     """Spark ``rtrim`` strips only spaces, so a word ending in a control
     character keeps it as a symbol: the trainer's Python encoding must
     give the same symbols as ``_encode_sym``, and ``learn_merges`` must
-    merge that trailing symbol."""
+    merge that trailing symbol. Java's regex '.' does not match U+0085,
+    U+2028 or U+2029, so those stay glued to the symbol before them, in
+    the DuckDB oracles' encoding too."""
+    import duckdb
     from pyspark.sql import functions as F
 
     from nfl_predictions_spark.operators.tokenizer import (
+        _bpe_cte_prefix,
         _encode_sym,
         _encode_sym_py,
         learn_merges,
     )
 
-    words = ["ab\t", "a\x0bb\x0c", "x\r", "tab\t\t", "plain"]
+    words = ["ab\t", "a\x0bb\x0c", "x\r", "tab\t\t", "plain",
+             "a\u2028b", "\u2029z", "c\x85d", "e\u2028\u2029f"]
     df = spark.createDataFrame([(w,) for w in words], "w string")
     assert [r[0] for r in df.select(_encode_sym(F.col("w"))).collect()] == [
         _encode_sym_py(w) for w in words
     ]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT ? AS text", [" ".join(words)])
+    oracle = con.execute(_bpe_cte_prefix(rounds=0) + " SELECT s FROM w0").fetchall()
+    assert sorted(r[0] for r in oracle) == sorted(_encode_sym_py(w) for w in words)
 
     spark.createDataFrame([(1, "ab\t ab\t ab\t cd")], "doc_id long, text string").write.parquet(
         str(tmp_path / "documents.parquet")

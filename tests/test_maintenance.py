@@ -195,6 +195,48 @@ def test_get_spark_sizes_shuffle_to_twice_the_parallelism(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(2 * default_parallelism())
 
 
+def test_get_spark_sizes_the_codegen_class_cache(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+#: A fixed mix of scans, joins, aggregates, windows, top-k and TPC-H plans
+#: whose generated classes together outnumber Spark's default cache of 100.
+ANALYTICS_MIX = [
+    "q01_scan_parquet",
+    "q04_filter_conjunctive",
+    "q06_join_broadcast",
+    "q07_join_shuffle_agg",
+    "q12_agg_pricing_summary",
+    "q16_window_lag_default",
+    "q17_window_rank",
+    "q20_topk",
+    "q156_tpch_q3",
+    "q157_tpch_q5",
+    "q159_tpch_q18",
+    "q45_percentiles",
+]
+
+
+def test_repeated_query_mix_compiles_no_generated_code(spark):
+    """A second pass of the mix reuses every class the first compiled:
+    the JVM's codegen cache holds the whole working set, so Janino
+    compiles nothing."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
+    def run_pass() -> int:
+        before = compiles.getCount()
+        for name in ANALYTICS_MIX:
+            queries[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    run_pass()
+    assert run_pass() == 0
+
+
 def test_table_and_stream_leave_session_conf_unchanged(spark, tmp_path):
     """A first ``table()`` call on an input dir and a ``run_to_batch``
     stream read the session conf and write none of it, whatever the

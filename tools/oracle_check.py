@@ -14,6 +14,7 @@ import datetime
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
@@ -129,7 +130,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from nfl_predictions_spark.session import get_spark
 

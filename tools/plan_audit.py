@@ -27,6 +27,7 @@ of the README's "declarative first" rule.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 #: Queries allowed to contain the given fragment.
 ALLOW = {
@@ -231,7 +232,7 @@ def empty_partition_windows(jplan) -> int:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from nfl_predictions_spark.session import get_spark
 
