@@ -9,10 +9,11 @@ exact ``assets/app_nfl.py:158`` semantics). The stream and
 Single-record scoring has two paths that give the same reply:
 
 - ``ScoringModel`` compiles one ``PipelineModel`` (StringIndexer ->
-  VectorAssembler -> GBTRegressionModel) into a direct tree walk: the
-  label -> index map, the trees in flat form and the tree weights.
-  Scoring a play is pure Python and launches no Spark job (the approach
-  of Hummingbird, OSDI 2020, for serving tree ensembles).
+  VectorAssembler -> GBTRegressionModel) into one generated Python
+  function: every tree as nested ``if`` statements, and the tree weights
+  folded into per-lane tables (below). Scoring a play is one call of it
+  and launches no Spark job (the approach of Hummingbird, OSDI 2020, for
+  serving tree ensembles).
 - ``score_record`` is the reference's form (``assets/app_nfl.py:151-160``):
   two transforms on a one-row DataFrame plus ``first()``.
 
@@ -20,11 +21,16 @@ The compiled path is used only when it is certified bit-identical to
 MLlib. ``GBTRegressionModel.predict`` is ``ddot(treePredictions,
 treeWeights)``, and the order in which BLAS accumulates that dot product
 depends on the host (sequential in the f2j BLAS; FMA lanes in the JDK
-vector-API BLAS, 8 of them with AVX-512). ``ScoringModel.compile`` scores
-a fixed probe set with each candidate order and with ``gbt.predict`` (one
-py4j call, no Spark job) and keeps the first order that matches every
-probe bit for bit. If none does, it logs a warning and returns None, and
-the caller stays on ``score_record``.
+vector-API BLAS, 8 of them with AVX-512). ``ScoringModel.certify`` scores
+a fixed probe set with each candidate order of the reference ``ddot`` and
+with ``gbt.predict`` (one py4j call, no Spark job) and keeps the first
+order that matches every probe bit for bit. It then generates the
+function for that order and checks it on the same probes. An FMA lane
+that holds one or two trees becomes a table of its fused value for every
+leaf (pair), computed with ``_fma`` exactly as ``ddot`` does, so a
+request makes no big-integer multiply-add. If no order matches, the
+generated function differs, or generating it fails, ``certify`` logs a
+warning and returns None, and the caller stays on ``score_record``.
 
 Both paths check a request with ``validate_request`` first, so neither
 scores a record the other would reject. ``request_error`` states the same
@@ -189,6 +195,10 @@ class Tree(NamedTuple):
             i = self.left[i] if go_left else self.right[i]
         return i
 
+    def leaves(self) -> list:
+        """Leaf node ids in order; a leaf's position here is its ordinal."""
+        return [i for i, f in enumerate(self.feature) if f < 0]
+
 
 _SPLIT = re.compile(r"If \(feature (\d+) (<=|in) (\S+)\)")
 
@@ -264,9 +274,107 @@ ORDERS = (0, 2, 4, 8, 16)
 _N_PROBES = 64
 
 
+def lane_table(trees: list, weights: list) -> list:
+    """The accumulator of an FMA lane of one or two trees, for every leaf
+    (pair): ``_fma`` of each leaf value and weight in ``ddot``'s order,
+    indexed by leaf ordinal (``a * len(second tree's leaves) + b``)."""
+    first = [_fma(v, weights[0], 0.0) for v in _leaf_values(trees[0])]
+    if len(trees) == 1:
+        return first
+    w, second = weights[1], _leaf_values(trees[1])
+    return [_fma(v, w, a) for a in first for v in second]
+
+
+def _leaf_values(tree: Tree) -> list:
+    return [tree.value[i] for i in tree.leaves()]
+
+
+def _literal(x: float) -> str:
+    """``x`` as Python source that reads back bit for bit."""
+    if not math.isfinite(x):
+        raise ValueError(f"no float literal for {x!r}")
+    return repr(float(x))
+
+
+def _emit_tree(tree: Tree, name: str, rhs: list, lines: list) -> None:
+    """Append ``tree`` as nested ``if`` statements in which the leaf of
+    ordinal ``k`` runs ``name = rhs[k]``."""
+    ordinal = {node: k for k, node in enumerate(tree.leaves())}
+
+    def emit(i: int, depth: int) -> None:
+        pad = "    " * depth
+        f = tree.feature[i]
+        if f < 0:
+            lines.append(f"{pad}{name} = {rhs[ordinal[i]]}")
+            return
+        s = tree.split[i]
+        if type(s) is frozenset:  # a set display: CPython folds `in {...}` to a constant
+            test = f"x{f} in {{{', '.join(map(_literal, sorted(s)))}}}"
+        else:
+            test = f"x{f} <= {_literal(s)}"
+        lines.append(f"{pad}if {test}:")
+        emit(tree.left[i], depth + 1)
+        lines.append(f"{pad}else:")
+        emit(tree.right[i], depth + 1)
+
+    emit(0, 2)
+
+
+def compile_ensemble(trees: list, weights: list, lanes: int):
+    """``x -> ddot(tree_predictions(x), weights, lanes)``, bit for bit, as
+    one generated function of straight-line code. Tree ``i`` sets ``l<i>``
+    (its leaf ordinal, pre-scaled for a table index) when its FMA lane
+    holds one or two trees, else ``v<i>`` (its leaf value). A lane of one
+    or two trees is a ``lane_table`` lookup, a longer lane an inline
+    ``_fma`` chain, and order 0 and the ``n % lanes`` tail trees a
+    sequential multiply-add. The source holds only numbers and fixed names.
+    Raises ``ValueError`` on a non-finite number and whatever ``compile``
+    raises on a source it cannot compile."""
+    n = len(trees)
+    bound = n - n % lanes if lanes else 0
+    groups = [range(j, bound, lanes) for j in range(lanes)] if bound else []
+    scale = {}  # tree -> multiplier of its leaf ordinal, for tree in a table lane
+    for g in groups:
+        if len(g) <= 2:
+            scale[g[-1]] = 1
+            if len(g) == 2:
+                scale[g[0]] = len(trees[g[1]].leaves())
+    used = sorted({f for t in trees for f in t.feature if f >= 0})
+    body = [f"        x{f} = x[{f}]" for f in used]
+    for i, tree in enumerate(trees):
+        if i in scale:
+            _emit_tree(tree, f"l{i}", [k * scale[i] for k in range(len(tree.leaves()))], body)
+        else:
+            _emit_tree(tree, f"v{i}", [_literal(v) for v in _leaf_values(tree)], body)
+    tables = []
+    body.append("        total = 0.0")
+    for g in groups:
+        if len(g) <= 2:
+            index = " + ".join(f"l{i}" for i in g)
+            body.append(f"        total += T{len(tables)}[{index}]")
+            tables.append(lane_table([trees[i] for i in g], [weights[i] for i in g]))
+        else:
+            acc = "0.0"
+            for i in g:
+                body.append(f"        a = _fma(v{i}, {_literal(weights[i])}, {acc})")
+                acc = "a"
+            body.append("        total += a")
+    for i in range(bound, n):
+        body.append(f"        total += v{i} * {_literal(weights[i])}")
+    params = "".join(f"T{j}, " for j in range(len(tables)))
+    source = "\n".join(
+        [f"def build({params}_fma):", "    def predict(x):", *body,
+         "        return total", "    return predict", ""]
+    )
+    namespace = {"__builtins__": {}}
+    exec(compile(source, f"<GBT ensemble: {n} trees, order {lanes}>", "exec"), namespace)
+    return namespace["build"](*tables, _fma)
+
+
 class ScoringModel:
     """One StringIndexer -> VectorAssembler -> GBTRegressionModel pipeline
-    as plain Python data, scored by walking its trees."""
+    as plain Python data, scored by the function ``certify`` generates
+    from its trees."""
 
     def __init__(self, source: str, labels: list, inputs: list, trees: list, weights: list):
         self.source = source  # the indexed request field (PlayType_lag)
@@ -275,6 +383,7 @@ class ScoringModel:
         self.trees = trees
         self.weights = weights
         self.order: int | None = None  # set by certify
+        self._predict = None  # the compiled ensemble, set by certify
 
     @classmethod
     def from_pipeline(cls, model: PipelineModel) -> ScoringModel:
@@ -305,10 +414,6 @@ class ScoringModel:
             log.warning("single-play scoring stays on Spark: %s", e)
             return None
         if compiled.certify(model.stages[-1]) is None:
-            log.warning(
-                "single-play scoring stays on Spark: no ddot order in %s "
-                "reproduces GBTRegressionModel.predict on this host", ORDERS
-            )
             return None
         return compiled
 
@@ -322,8 +427,9 @@ class ScoringModel:
         return [t.value[t.leaf(x)] for t in self.trees]
 
     def predict(self, record: dict) -> float:
-        """Raw prediction for a validated record, in the certified order."""
-        return ddot(self.tree_predictions(self.features(record)), self.weights, self.order)
+        """Raw prediction for a validated record: one call of the certified
+        compiled ensemble."""
+        return self._predict(self.features(record))
 
     def probes(self) -> list:
         """A fixed set of feature vectors: label indices in turn, every
@@ -345,12 +451,15 @@ class ScoringModel:
         return out
 
     def certify(self, gbt: GBTRegressionModel) -> int | None:
-        """Set and return the first order in ``ORDERS`` whose ``ddot``
-        equals ``gbt.predict`` bit for bit on every probe, else None."""
+        """Find the first order in ``ORDERS`` whose ``ddot`` equals
+        ``gbt.predict`` bit for bit on every probe, compile the current
+        trees for it and check the compiled ensemble on the same probes.
+        Set and return the order; else log why and return None."""
+        self.order = self._predict = None
         probes = self.probes()
         want = [gbt.predict(Vectors.dense(x)).hex() for x in probes]
         preds = [self.tree_predictions(x) for x in probes]
-        self.order = next(
+        order = next(
             (
                 lanes
                 for lanes in ORDERS
@@ -358,7 +467,25 @@ class ScoringModel:
             ),
             None,
         )
-        return self.order
+        if order is None:
+            log.warning(
+                "single-play scoring stays on Spark: no ddot order in %s "
+                "reproduces GBTRegressionModel.predict on this host", ORDERS
+            )
+            return None
+        try:
+            predict = compile_ensemble(self.trees, self.weights, order)
+        except (ValueError, SyntaxError, RecursionError, MemoryError) as e:
+            log.warning("single-play scoring stays on Spark: generating its code failed: %r", e)
+            return None
+        if any(predict(x).hex() != w for x, w in zip(probes, want)):
+            log.warning(
+                "single-play scoring stays on Spark: the compiled ensemble (order %d) "
+                "differs from GBTRegressionModel.predict on a probe", order
+            )
+            return None
+        self.order, self._predict = order, predict
+        return order
 
 
 def _round2(x: float) -> float:

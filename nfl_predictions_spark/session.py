@@ -100,6 +100,14 @@ def get_spark(app_name: str = "nfl_predictions_spark", master: str | None = None
         # holds ~6x that set, and metaspace after three passes is no larger
         # than with 100 (recompiled classes are loaded anew each time).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # PySpark wraps every Column method and functions.* call to record
+        # its Python call site for runtime error messages: each wrapped call
+        # reads a conf and sets and clears PySparkCurrentOrigin over py4j,
+        # 4-6 round trips that only that message context uses. Off, building
+        # q45 at sf0.001 takes ~680 py4j commands instead of ~2 500; errors
+        # keep their class and message. PySpark reads this once per Python
+        # process, at the first wrapped call made with an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)

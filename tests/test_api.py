@@ -450,6 +450,54 @@ def test_uncertified_models_fall_back_to_spark(spark, service, monkeypatch, capl
         fallback.score(dict(GOLDEN_REQUEST, PlayType_lag="Bogus"))
 
 
+def test_corrupted_lane_table_falls_back_to_spark(spark, service, monkeypatch, caplog):
+    """Certification checks the generated function as well as the order:
+    with the ``ddot`` reference intact but one lane-table entry that a
+    probe reads off by 1e-9, ``certify`` returns None, and the service
+    logs one warning and scores through Spark. A generation error also
+    makes ``certify`` return None, with its own warning."""
+    import logging
+
+    from nfl_predictions_spark.api import ScoringService
+    from nfl_predictions_spark.ml import score
+    from nfl_predictions_spark.ml.score import GOLDEN_REQUEST, ScoringModel
+
+    gbt = service.pass_model.stages[-1]
+    model = ScoringModel.from_pipeline(service.pass_model)
+    order = model.certify(gbt)
+    if not order or len(model.trees) // order > 2:
+        pytest.skip(f"order {order} on this host has no lane tables")
+    probe, real, corrupted = model.probes()[0], score.lane_table, []
+
+    def corrupt_first(trees, weights):
+        table = real(trees, weights)
+        if not corrupted:
+            a, *b = (t.leaves().index(t.leaf(probe)) for t in trees)
+            i = a * len(trees[1].leaves()) + b[0] if b else a
+            table[i] += 1e-9
+            corrupted.append(i)
+        return table
+
+    monkeypatch.setattr(score, "lane_table", corrupt_first)
+    assert model.certify(gbt) is None and corrupted
+    corrupted.clear()
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=score.__name__):
+        fallback = ScoringService(spark, service.pass_model, service.run_model)
+    assert fallback._compiled is None
+    warnings = [r for r in caplog.records if r.name == score.__name__]
+    assert len(warnings) == 1 and "compiled ensemble" in warnings[0].getMessage()
+    assert fallback.score(dict(GOLDEN_REQUEST)) == service.score(dict(GOLDEN_REQUEST))
+
+    def fails(*args):
+        raise SyntaxError("too many levels of indentation")
+
+    monkeypatch.setattr(score, "compile_ensemble", fails)
+    caplog.clear()
+    assert model.certify(gbt) is None
+    assert "generating its code failed" in caplog.records[-1].getMessage()
+
+
 def test_http_bad_requests_get_json_errors(service, monkeypatch):
     """Every POST gets an answer: a bad Content-Length or an unseen label
     is a 400 JSON error, any other failure a 500 JSON error, and the

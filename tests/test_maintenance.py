@@ -237,6 +237,33 @@ def test_repeated_query_mix_compiles_no_generated_code(spark):
     assert run_pass() == 0
 
 
+def test_building_a_query_makes_few_py4j_calls(spark, monkeypatch):
+    """``get_spark`` turns off PySpark's per-call origin capture, which
+    wraps every Column method and ``functions.*`` call in 4-6 extra py4j
+    round trips. Building q45 (no action) then takes under 1 000 py4j
+    commands; with the capture on it takes ~2 500. py4j's object-release
+    commands (``m``) are not counted: they follow Python's garbage
+    collector, not the build."""
+    import __spark_entry__ as entrymod
+
+    build = entrymod.queries()["q45_percentiles"]
+    build(spark, SF_SMOKE)  # stage and cache the inputs first
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    real = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    build(spark, SF_SMOKE)
+    monkeypatch.undo()
+    assert 0 < len(sent) < 1000, len(sent)
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_table_and_stream_leave_session_conf_unchanged(spark, tmp_path):
     """A first ``table()`` call on an input dir and a ``run_to_batch``
     stream read the session conf and write none of it, whatever the

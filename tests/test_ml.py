@@ -113,6 +113,94 @@ def test_synthetic_lag_invariants(synthetic):
 
 
 # ---------------------------------------------------------------------------
+# Compiled single-play scoring, without Spark
+# ---------------------------------------------------------------------------
+
+_CATEGORICAL = 9  # the last of 10 features takes the categories 0..3
+
+
+def _random_tree(rng, depth):
+    """A tree of depth <= ``depth`` in ``Tree``'s flat form, with
+    continuous splits on features 0..8 and categorical ones on 9."""
+    from nfl_predictions_spark.ml.score import Tree
+
+    tree = Tree([], [], [], [], [])
+
+    def node(d):
+        i = len(tree.feature)
+        for column, v in zip(tree, (-1, None, -1, -1, 0.0)):
+            column.append(v)
+        if d == depth or (d and rng.random() < 0.25):
+            tree.value[i] = rng.uniform(-30.0, 30.0)
+            return i
+        f = rng.randrange(_CATEGORICAL + 1)
+        tree.feature[i] = f
+        if f == _CATEGORICAL:
+            tree.split[i] = frozenset(float(c) for c in rng.sample(range(4), rng.randint(1, 3)))
+        else:
+            tree.split[i] = rng.randrange(-10, 10) + 0.5
+        tree.left[i] = node(d + 1)
+        tree.right[i] = node(d + 1)
+        return i
+
+    node(0)
+    return tree
+
+
+@pytest.mark.parametrize("n_trees", [20, 23])
+def test_compiled_ensemble_is_ddot_of_the_tree_walk(n_trees):
+    """For every candidate order the generated function equals the
+    reference ``ddot`` over the tree walk bit for bit. 20 and 23 trees
+    give lanes of one tree (order 16), two (8) and more (2, 4), with and
+    without a tail."""
+    import random
+
+    from nfl_predictions_spark.ml.score import ORDERS, compile_ensemble, ddot
+
+    rng = random.Random(n_trees)
+    trees = [_random_tree(rng, rng.randint(1, 5)) for _ in range(n_trees)]
+    weights = [1.0] + [rng.uniform(0.01, 1.0) for _ in range(n_trees - 1)]
+    # Half the continuous values sit exactly on a threshold (x.5).
+    xs = [
+        [rng.randrange(-11, 12) + rng.choice((0.0, 0.5)) for _ in range(_CATEGORICAL)]
+        + [float(rng.randrange(4))]
+        for _ in range(400)
+    ]
+    walked = [[t.value[t.leaf(x)] for t in trees] for x in xs]
+    by_order = {}
+    for order in ORDERS:
+        predict = compile_ensemble(trees, weights, order)
+        got = [predict(x).hex() for x in xs]
+        assert got == [ddot(p, weights, order).hex() for p in walked], order
+        by_order[order] = got
+    # The orders round differently on some inputs, so a mixed-up order
+    # shows; one tree per lane (order 16) is the sequential order.
+    assert by_order[16] == by_order[0]
+    assert len({tuple(by_order[k]) for k in (0, 2, 4, 8)}) == 4
+
+
+def test_compiled_ensemble_too_deep_for_python_raises():
+    """A tree nested past the tokenizer's 100 indentation levels fails to
+    compile with a ``SyntaxError``, which ``certify`` turns into the Spark
+    fallback (MLlib's depth limit of 30 stays well below it)."""
+    from nfl_predictions_spark.ml.score import Tree, compile_ensemble
+
+    depth = 100
+    tree = Tree([], [], [], [], [])
+    for d in range(depth):  # a chain: node 2d splits, 2d+1 is its left leaf
+        tree.feature.extend([0, -1])
+        tree.split.extend([float(d), None])
+        tree.left.extend([2 * d + 1, -1])
+        tree.right.extend([2 * d + 2, -1])
+        tree.value.extend([0.0, float(d)])
+    for column, v in zip(tree, (-1, None, -1, -1, -1.0)):
+        column.append(v)
+    assert tree.value[tree.leaf([1e9])] == -1.0
+    with pytest.raises(SyntaxError):
+        compile_ensemble([tree], [1.0], 0)
+
+
+# ---------------------------------------------------------------------------
 # Pipeline contract
 # ---------------------------------------------------------------------------
 
